@@ -21,6 +21,7 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -66,15 +67,15 @@ def _tmpdir(prefix: str) -> str:
 # head of EVERY query composition — re-running it re-infers all ten
 # parquet schemas (measured 0.8 s per call, ~95 s of pure overhead
 # across a 119-query driver sweep).  Pure metadata (temp views), never
-# data or results, so memoizing it cannot cache computation; keyed on
-# (applicationId, sf_dir) so a different data dir or a fresh session
-# always re-registers.
-_REGISTERED: dict[str, str] = {}  # applicationId -> currently registered dir
+# data or results, so memoizing it cannot cache computation.  Keyed on
+# the SparkSession itself, because temp views are session-scoped: a
+# ``newSession()`` shares the applicationId but none of the views, so
+# it (like a different data dir) always re-registers.
+_REGISTERED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _register(spark: SparkSession, sf_dir: str) -> None:
-    app = spark.sparkContext.applicationId
-    if _REGISTERED.get(app) == sf_dir:
+    if _REGISTERED.get(spark) == sf_dir:
         return
     par = spark.sparkContext.defaultParallelism
     for t in TABLES:
@@ -83,7 +84,7 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
                 and df.rdd.getNumPartitions() < par):
             df = df.repartition(par)
         df.createOrReplaceTempView(t)
-    _REGISTERED[app] = sf_dir
+    _REGISTERED[spark] = sf_dir
 
 
 # Integer key column spanning the largest table: lineitem rows keyed by
@@ -285,7 +286,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries / oracle_sql
 # ===========================================================================
 
-# (pairs_df, cache_handles) per (applicationId, sf_dir) — see
+# (pairs_df, cache_handles) per (SparkSession, sf_dir) — see
 # _shared_pairs inside queries()
 _PAIRS_MEMO: dict = {}
 # _shared_simhash inside queries() (ADVICE r4: same leak class)
@@ -300,12 +301,13 @@ _CLUSTERED_MEMO: dict = {}
 
 
 def _memo_shared(memo: dict, spark, sf_dir, build):
-    """One persisted banded frame per (app, sf_dir), evicted +
+    """One persisted banded frame per (session, sf_dir), evicted +
     unpersisted on key change — the shared contract of _shared_pairs
     and _shared_simhash (r5 review: previously duplicated verbatim).
-    ``build(cache)`` constructs the DataFrame, appending its persisted
-    dependencies to ``cache``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    Session-keyed like _REGISTERED: the memoized plan reads that
+    session's temp views.  ``build(cache)`` constructs the DataFrame,
+    appending its persisted dependencies to ``cache``."""
+    key = (spark, sf_dir)
     hit = memo.get(key)
     if hit is None:
         _evict_memo(memo)
@@ -518,7 +520,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from geocoordinateconverter_spark.operators import tiles as tiles_op
         pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
         return tiles_op.tile_topk_points(pts, key="k", res=5, k=3)
-    q["tile_topk_applyinpandas"] = q_tile_topk
+    q["tile_topk_window"] = q_tile_topk
 
     # ---- kNN join --------------------------------------------------------
     def q_knn(spark, sf_dir):
@@ -1411,7 +1413,7 @@ _WINDOW_PRIORITY = [
     "t2_wgs84_to_tm", "t5_gk_to_tm", "t4_wgs84_to_gk", "t6_tm_to_gk",
     "t7_gk_to_wgs84_aft", "t8_wgs84_to_gk_aft", "t9_gk_to_tm_aft",
     "t10_tm_to_gk_aft", "tile_t3_cells", "tile_rollup_res5",
-    "tile_topk_applyinpandas", "webpages_text_passthrough",
+    "tile_topk_window", "webpages_text_passthrough",
     "geoparse_decimal_degrees", "geoparse_multi_mention", "geoparse_dms",
     "geoparse_reject_stats", "pip_join_municipalities", "pip_tile_agg",
     "knn_join_stations", "aft_locate_triangle", "geoid_bilinear",
@@ -1570,7 +1572,7 @@ FROM (
         f"WHERE {pip_op.pip_oracle_condition()}) q GROUP BY mun_id")
 
     from geocoordinateconverter_spark import cells as _c
-    o["tile_topk_applyinpandas"] = f"""
+    o["tile_topk_window"] = f"""
 SELECT cell, k, h, rk FROM (
   SELECT {_c.encode_sql('fi', 'la', 5)} AS cell, k, h,
          cast(row_number() OVER (

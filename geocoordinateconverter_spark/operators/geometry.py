@@ -23,9 +23,6 @@ from pyspark.sql import functions as F
 
 from ..kernels import transform_udf
 
-VERTEX_RE = r"(-?[0-9]+\.?[0-9]*) (-?[0-9]+\.?[0-9]*)"
-
-
 def wkt_vertices(df: DataFrame, geom_id: str = "geom_id",
                  wkt: str = "wkt") -> DataFrame:
     """POLYGON/LINESTRING WKT → one row per vertex (geom_id, idx, x, y).

@@ -52,24 +52,12 @@ def host_edges(orders: DataFrame) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst")).distinct()
 
 
-# above this node count the per-iteration rank table stops being a
-# safe broadcast (10⁷–10⁸ hosts on a real web graph) and the rank
-# attach becomes a hash equi-join against the src-partitioned edge
-# table instead — VERDICT r5 #7, parameterized rather than hardcoded
-RANK_BROADCAST_MAX = 1_000_000
-
-
 def pagerank_hosts(orders: DataFrame, spark: SparkSession,
-                   n_iter: int = N_ITER,
-                   rank_broadcast: bool | None = None) -> DataFrame:
+                   n_iter: int = N_ITER) -> DataFrame:
     """(node, pr, outdeg) after ``n_iter`` fixed-point iterations.
-    pr is the int64 rank ×10¹²; outdeg 0 marks dangling nodes.
-    ``rank_broadcast``: None = auto (broadcast while the node count is
-    under RANK_BROADCAST_MAX, shuffle hash join above — the int64
-    fixed-point sums make both strategies bit-identical, pytest-
-    asserted)."""
-    if rank_broadcast is None:
-        rank_broadcast = N_HOSTS <= RANK_BROADCAST_MAX
+    pr is the int64 rank ×10¹²; outdeg 0 marks dangling nodes.  The
+    per-iteration rank table (N_HOSTS rows) is broadcast to the
+    src-partitioned edge table."""
     edges = host_edges(orders)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = spark.range(N_HOSTS).select(F.col("id").alias("node"))
@@ -78,8 +66,7 @@ def pagerank_hosts(orders: DataFrame, spark: SparkSession,
     # edge side: one partitioning by src, reused every round
     esrc = edges.join(outdeg, "src").repartition("src")
     for _ in range(n_iter):
-        pr_side = F.broadcast(pr) if rank_broadcast else pr
-        contrib = (esrc.join(pr_side,
+        contrib = (esrc.join(F.broadcast(pr),
                              esrc["src"] == pr["node"])
                    .select("dst", F.expr("pr div outdeg").alias("c"))
                    .groupBy("dst").agg(F.sum("c").alias("s")))

@@ -3,23 +3,19 @@
 Engine paths:
 
 * ``brute_force_topk`` — exact cosine top-k of every query vector
-  against the corpus via a broadcast of the (small) query set; the dot
-  product/norms are **unrolled 64-term Catalyst expressions** (pure
-  codegen, no Python, and — crucially for the DuckDB oracle — a fixed
-  left-associated summation order that both engines evaluate
-  bit-identically; float32 elements are cast to float64 first, which
-  is exact).
-* ``lsh_buckets`` — random-hyperplane LSH: 8 deterministic hyperplanes
+  against the corpus: one Arrow map pass scores corpus batches against
+  the broadcast (small) query set with a fixed left-associated
+  d-ascending float64 fold — the summation order the DuckDB oracle's
+  ``list_reduce`` uses, so both engines agree bit-for-bit (float32
+  elements are cast to float64 first, which is exact).
+* ``lsh_topk`` — random-hyperplane LSH: 8 deterministic hyperplanes
   (coefficients derived by integer mixing, no RNG) → 8-bit bucket id
-  per vector.  At scale, near-dup candidate pairs come from equal
-  buckets (one hash-shuffle) instead of the O(n²) cross join; the
-  brute-force path stays as the small-side/rerank baseline.
+  per vector; candidates are the vectors in the query's bucket.
+* IVF-flat, IVF-nprobe, PQ-ADC and IVF-PQ top-k — coarse-quantizer
+  cells and product-quantized codes (sections below), all through the
+  same Arrow candidate kernel (:func:`_topk_candidates`).
 * ``cosine_near_dup`` — pairs over a doc_id window with cosine above a
   threshold (embedding near-dup dedup entry).
-
-A Pandas-UDF dot-product kernel is provided for wide vectors (where an
-unrolled expression would bloat codegen); pytest asserts it matches the
-unrolled path bitwise.
 """
 
 from __future__ import annotations
@@ -74,13 +70,6 @@ def plane_coef(p: int, d: int) -> float:
     return (((p * DIM + d + 1) * 2654435761) % 1000000) / 1000000.0 - 0.5
 
 
-def plane_proj_col(a: str, p: int, dim: int = DIM) -> Column:
-    expr = F.lit(plane_coef(p, 0)) * _elem(a, 1)
-    for d in range(1, dim):
-        expr = expr + F.lit(plane_coef(p, d)) * _elem(a, d + 1)
-    return expr
-
-
 def plane_proj_sql(a: str, p: int, dim: int = DIM) -> str:
     """Hyperplane projection with the coefficient CLOSED FORM evaluated
     inside the fold lambda (same integer mixing as :func:`plane_coef`;
@@ -91,37 +80,6 @@ def plane_proj_sql(a: str, p: int, dim: int = DIM) -> str:
     return (f"list_reduce(list_transform(generate_series(1, {dim}), "
             f"__d -> {coef} * cast(({a})[__d] as double)), "
             f"(__x, __y) -> __x + __y)")
-
-
-def lsh_bucket_col(a: str) -> Column:
-    expr = F.lit(0).cast("bigint")
-    for p in range(N_PLANES):
-        expr = expr + F.when(plane_proj_col(a, p) > 0,
-                             F.lit(1 << p).cast("bigint")).otherwise(0)
-    return expr
-
-
-def lsh_bucket_fold_col(a: str) -> Column:
-    """Same bucket id as :func:`lsh_bucket_col`, built as nested
-    HOF folds instead of 512 unrolled terms.  Used on the join paths
-    (lsh_topk and the recall reports' LSH arm): fused with the join +
-    rerank stage, the unrolled form pushes the generated doConsume
-    past the JVM's 64 KB method limit and the WHOLE stage falls back
-    to interpreted eval (observed in the r5 sweep); the fold form is a
-    small interpreted island inside an otherwise codegen stage.
-    Bit-equivalent: the projection fold is the same d-ascending
-    left-associated sum with the same closed-form coefficients
-    (plane_coef), and the sign test is unaffected by the fold's
-    0.0+x seed."""
-    coef = (f"(cast(((p * {DIM} + d) * 2654435761) % 1000000 as double) "
-            f"/ 1000000.0e0 - 0.5e0)")
-    proj = (f"aggregate(sequence(1, {DIM}), cast(0.0 as double), "
-            f"(acc2, d) -> acc2 + {coef} "
-            f"* cast(element_at({a}, d) as double))")
-    return F.expr(
-        f"aggregate(sequence(0, {N_PLANES - 1}), 0, "
-        f"(acc, p) -> acc + CASE WHEN {proj} > 0.0e0 "
-        f"THEN shiftleft(1, p) ELSE 0 END)")
 
 
 def lsh_bucket_sql(a: str) -> str:
@@ -171,8 +129,7 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
     as the unrolled expression form by the d-ascending fold order).
     The 8×64-term unrolled Catalyst expression it replaces spent more
     time in janino compilation than execution (measured 3.4 s → 0.6 s
-    for 20k vectors); :func:`lsh_bucket_col` remains the expression
-    twin for the oracle and pytest."""
+    for 20k vectors); :func:`lsh_buckets_sql` is the DuckDB twin."""
 
     @pandas_udf("bigint")
     def _udf(e: pd.Series) -> pd.Series:
@@ -182,9 +139,6 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
         return pd.Series(_lsh_buckets_np(X))
 
     return emb.select("vec_id", _udf(F.col("embedding")).alias("bucket"))
-
-
-LSH_BUCKETS_SQL = None  # built lazily (needs the generated projections)
 
 
 def lsh_buckets_sql() -> str:
@@ -318,24 +272,14 @@ def ivf_cluster_udf():
     NOT a codegen CASE: a first-max-wins CASE over 16 scores re-embeds
     the 1024-term ``greatest`` in every branch — a ~10⁵-node expression
     tree that blows past janino's compile budget (measured: 72 s at
-    sf0.1 vs <2 s here).  The kernel accumulates each score with the
-    SAME left-fold order as :func:`ivf_score_sql` (d ascending, then
-    subtract the halfnorm), so scores are bit-identical to the oracle's
-    and ``argmax`` (first max wins) picks the identical cell."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
-
+    sf0.1 vs <2 s here).  :func:`_ivf_scores_np` accumulates each score
+    with the SAME left-fold order as :func:`ivf_score_sql` (d ascending,
+    then subtract the halfnorm), so scores are bit-identical to the
+    oracle's and ``argmax`` (first max wins) picks the identical cell."""
     @pandas_udf("int")
     def _udf(emb: pd.Series) -> pd.Series:
         X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], N_CLUSTERS))
-        for c in range(N_CLUSTERS):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, DIM):  # fold order == ivf_score_sql
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        return pd.Series(scores.argmax(axis=1).astype(np.int32))
+        return pd.Series(_ivf_scores_np(X).argmax(axis=1).astype(np.int32))
 
     return _udf
 
@@ -381,30 +325,6 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
     ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) z
 WHERE rk <= {k}
 """
-
-
-def ivf_probe_udf(nprobe: int):
-    """Top-``nprobe`` quantizer cells per query vector (score DESC,
-    cell ASC on ties) — same bit-identical score fold as
-    :func:`ivf_cluster_udf`; stable argsort makes the tie rule match
-    the oracle's ``ORDER BY score DESC, cell ASC``."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
-
-    @pandas_udf("array<int>")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], N_CLUSTERS))
-        for c in range(N_CLUSTERS):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, DIM):  # fold order == ivf_score_sql
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([r.tolist() for r in order.astype(np.int32)])
-
-    return _udf
 
 
 def ivf_nprobe_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
@@ -457,77 +377,12 @@ WHERE rk <= {k}
 """
 
 
-def _assign_udf_from(C: np.ndarray):
-    """Nearest-centroid assignment for an arbitrary centroid matrix
-    (same argmax x·c − ‖c‖²/2 form and fold order as ivf_cluster_udf,
-    which is the fixed-grid special case)."""
-    H = 0.5 * (C * C).sum(axis=1)
-    n_c, dim = C.shape
-
-    @pandas_udf("int")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        scores = np.empty((X.shape[0], n_c))
-        for c in range(n_c):
-            acc = C[c, 0] * X[:, 0]
-            for d in range(1, dim):
-                acc = acc + C[c, d] * X[:, d]
-            scores[:, c] = acc - H[c]
-        return pd.Series(scores.argmax(axis=1).astype(np.int32))
-
-    return _udf
-
-
-def ivf_train_kmeans(emb: DataFrame, n_iter: int = 3):
-    """Learned coarse quantizer: Lloyd's k-means over the corpus with
-    DETERMINISTIC init (the fixed-grid centroids) and a FIXED iteration
-    count — the standard upgrade from the static IVF grid when the
-    embedding distribution is known.
-
-    Per iteration: one Arrow assignment pass (centroids live in the UDF
-    closure — 16×DIM floats, no broadcast table needed) and one
-    posexplode → groupBy(cluster, dim) mean for the update; the driver
-    collects only the 16×DIM centroid matrix between iterations (the
-    irreducible synchronization point of Lloyd's algorithm — same shape
-    at 10¹² rows).  Empty clusters keep their previous centroid.
-
-    Iterative + float-sum-order-dependent (distributed mean) → this is
-    the documented rows-only driver-check class (no SQL oracle); the
-    pytest asserts the full replay against NumPy.  Returns
-    (cluster, n_vecs, centroid) with centroids rounded to 9 dp."""
-    C = np.array([[centroid_coef(c, d) for d in range(DIM)]
-                  for c in range(N_CLUSTERS)])
-    assigned = None
-    for _ in range(n_iter):
-        assigned = emb.withColumn(
-            "cluster", _assign_udf_from(C)(F.col("embedding")))
-        stats = (assigned
-                 .select("cluster", F.posexplode("embedding").alias("d", "v"))
-                 .groupBy("cluster", "d")
-                 .agg(F.avg("v").alias("m"))
-                 .collect())  # ≤ N_CLUSTERS·DIM tiny rows
-        C = C.copy()
-        for r in stats:
-            C[r.cluster, r.d] = r.m
-    cent_lit = {c: F.array(*[F.lit(round(float(C[c, d]), 9))
-                             for d in range(DIM)])
-                for c in range(N_CLUSTERS)}
-    cent_col = F.lit(None).cast("array<double>")
-    for c in range(N_CLUSTERS - 1, -1, -1):
-        cent_col = F.when(F.col("cluster") == c, cent_lit[c]) \
-            .otherwise(cent_col)
-    return (assigned.groupBy("cluster")
-            .agg(F.count("*").alias("n_vecs"))
-            .withColumn("centroid", cent_col)
-            .select("cluster", "n_vecs", "centroid"))
-
-
 # ---------------------------------------------------------------------------
-# Fixed-point Lloyd (r4): the driver-gateable k-means.  The float
-# trainer above is correct but its distributed mean is summation-order
-# dependent, so its output cannot carry a value-hash oracle (and a
-# rows-only gate cannot even canonicalize an array column —
-# CORRECTNESS_r03's one red row).  The fix is not cosmetic reshaping
+# Fixed-point Lloyd (r4): the driver-gateable k-means.  A float
+# trainer's distributed mean is summation-order dependent, so its
+# output cannot carry a value-hash oracle (and a rows-only gate cannot
+# even canonicalize an array column — CORRECTNESS_r03's one red row).
+# The fix is not cosmetic reshaping
 # but an algorithmic one that is *better at scale*: quantize vectors
 # AND centroids to a 2^24 integer grid so every dot product, partial
 # sum, and mean-update is exact int64 arithmetic.  Exact integer sums
@@ -772,23 +627,6 @@ def over_clustered_sql(arm_sql: str) -> str:
     return re.sub(r"\bembeddings\b", "emb_clustered", arm_sql)
 
 
-def dot_pandas_udf(dim: int = DIM):
-    """Arrow-batched dot product for wide vectors (the unrolled-expr
-    alternative when dim is large); bitwise-equal to dot_col by
-    sequential accumulation order."""
-
-    @pandas_udf("double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy()).astype(np.float64)
-        bm = np.stack(b.to_numpy()).astype(np.float64)
-        acc = am[:, 0] * bm[:, 0]
-        for i in range(1, am.shape[1]):  # fixed order == unrolled expr
-            acc = acc + am[:, i] * bm[:, i]
-        return pd.Series(acc)
-
-    return _udf
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (r5): the third ANN scale path, and the one that
 # actually carries a 100 TB embedding corpus.  IVF-flat still scans raw
@@ -813,12 +651,12 @@ def dot_pandas_udf(dim: int = DIM):
 # * encode — map-only (one Arrow crossing), done ONCE at ingest; at
 #   10¹⁰ vectors the codes table is ~80 GB vs 2.5 TB raw.
 # * pq_adc_topk — the compressed-domain full scan: corpus codes ×
-#   broadcast query LUTs.  Declared a BNLJ baseline like
-#   ann_cosine_topk: the cross product is the semantics; PQ makes each
-#   pair 8 adds instead of 64 mul-adds on 32× less I/O.
-# * ivfpq_topk — the production path: candidates from the IVF cell
-#   equi-join (nprobe cells per query, corpus side untouched), scored
-#   via ADC folds.  No BNLJ, no raw-vector reads after ingest.
+#   broadcast query LUTs.  Every pair is scored (the cross product is
+#   the semantics); PQ makes each pair 8 adds instead of 64 mul-adds
+#   on 32× less I/O.
+# * ivfpq_topk — the production path: candidates limited to the
+#   query's nprobe IVF cells, scored via ADC folds.  No raw-vector
+#   reads after ingest.
 # ---------------------------------------------------------------------------
 
 PQ_M = 8                      # subspaces
@@ -863,47 +701,12 @@ def pq_encode_udf():
     """array<int> of PQ_M codes per vector (one Arrow crossing);
     argmax is first-max-wins, matching the oracle's
     ``ORDER BY score DESC, j ASC``."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-
     @pandas_udf("array<int>")
     def _udf(emb: pd.Series) -> pd.Series:
         X = np.stack(emb.to_numpy()).astype(np.float64)
-        codes = np.empty((X.shape[0], PQ_M), dtype=np.int32)
-        for m in range(PQ_M):
-            codes[:, m] = _pq_scores_np(X, C, H, m).argmax(axis=1)
-        return pd.Series([r.tolist() for r in codes])
+        return pd.Series([r.tolist() for r in _pq_codes_np(X)])
 
     return _udf
-
-
-def pq_lut_udf():
-    """array<double> of PQ_M*PQ_K ADC table entries per query vector
-    (entry m*PQ_K + j = subspace-m score against centroid j)."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-
-    @pandas_udf("array<double>")
-    def _udf(emb: pd.Series) -> pd.Series:
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        lut = np.empty((X.shape[0], PQ_M * PQ_K))
-        for m in range(PQ_M):
-            lut[:, m * PQ_K:(m + 1) * PQ_K] = _pq_scores_np(X, C, H, m)
-        return pd.Series([r.tolist() for r in lut])
-
-    return _udf
-
-
-def adc_score_col(lut: str = "q_lut", codes: str = "codes") -> Column:
-    """Σ_m lut[m*PQ_K + codes[m]] as a codegen left fold in m order
-    (order-fixed so the float64 sum is bit-identical to the oracle's
-    list_reduce — a groupBy SUM would be partition-order dependent)."""
-    return F.expr(
-        f"aggregate(sequence(0, {PQ_M - 1}), cast(0.0 as double), "
-        f"(acc, m) -> acc + element_at({lut}, "
-        f"m * {PQ_K} + element_at({codes}, m + 1) + 1))")
 
 
 def _pq_coef_sql(m: str, j: str, d1: str) -> str:
@@ -1253,8 +1056,8 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 # 192 `element_at` casts per pair (116 s at the driver's sf1.0).  The
 # guide's §4.2 move: hand whole batches to NumPy.  The kernel below
 # computes the SAME fold (same operation order, same IEEE ops — NumPy
-# elementwise ops neither fuse nor reassociate, the precedent
-# established by ivf_cluster_udf/_pq_scores_np and pinned by pytest)
+# elementwise ops neither fuse nor reassociate — pinned by pytest
+# against the DuckDB twins)
 # over (batch × query) score matrices, pre-selects per task every row
 # that can still reach the global top-k (score >= the task-local kth
 # score, so exact ties survive), and emits only those candidate rows.
@@ -1265,9 +1068,9 @@ def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
 #
 # Scale shape: the corpus side stays a single map pass (mapInArrow),
 # queries/LUTs ride a broadcast (q ≈ n/50 · 0.5 KB), the shuffle
-# carries ≤ tasks·q·k candidate rows.  The local single-file parquet
-# scan is round-robin split to defaultParallelism first (5 MB at the
-# fixture; a real multi-split scan skips that branch).
+# carries ≤ tasks·q·k candidate rows.  The kernel maps whatever
+# partitions its input has: input splitting is decided once, when the
+# tables are registered (``__spark_entry__._register``).
 # ---------------------------------------------------------------------------
 
 
@@ -1299,8 +1102,9 @@ def _fold_norm2_np(X: np.ndarray) -> np.ndarray:
 
 def _ivf_scores_np(X: np.ndarray) -> np.ndarray:
     """(n, N_CLUSTERS) quantizer scores — the exact fold of
-    :func:`ivf_cluster_udf` (shared so the kernel's cell assignment is
-    the same float64s as the UDF's and the oracle's)."""
+    :func:`ivf_score_sql` (shared by :func:`ivf_cluster_udf` and the
+    candidate kernel, so both assign cells from the oracle's
+    float64s)."""
     C = np.array([[centroid_coef(c, d) for d in range(DIM)]
                   for c in range(N_CLUSTERS)])
     H = np.array([_centroid_halfnorm(c) for c in range(N_CLUSTERS)])
@@ -1315,7 +1119,7 @@ def _ivf_scores_np(X: np.ndarray) -> np.ndarray:
 
 def _lsh_buckets_np(X: np.ndarray) -> np.ndarray:
     """(n,) int64 bucket ids — the exact projection fold of
-    :func:`plane_proj_col` (d-ascending; sign test unaffected by the
+    :func:`plane_proj_sql` (d-ascending; sign test unaffected by the
     fold variants' ±0.0 seeds)."""
     out = np.zeros(X.shape[0], dtype=np.int64)
     for p in range(N_PLANES):
@@ -1326,19 +1130,9 @@ def _lsh_buckets_np(X: np.ndarray) -> np.ndarray:
     return out
 
 
-def _pq_codes_np(X: np.ndarray) -> np.ndarray:
-    """(n, PQ_M) int codes — exact twin of :func:`pq_encode_udf`."""
-    C = pq_codebook()
-    H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
-                  for m in range(PQ_M)])
-    codes = np.empty((X.shape[0], PQ_M), dtype=np.int64)
-    for m in range(PQ_M):
-        codes[:, m] = _pq_scores_np(X, C, H, m).argmax(axis=1)
-    return codes
-
-
 def _pq_lut_np(X: np.ndarray) -> np.ndarray:
-    """(n, PQ_M·PQ_K) ADC tables — exact twin of :func:`pq_lut_udf`."""
+    """(n, PQ_M·PQ_K) ADC tables, entry m·PQ_K + j = the subspace-m
+    score against centroid j — exact twin of :func:`pq_lut_sql`."""
     C = pq_codebook()
     H = np.array([[_pq_halfnorm(m, j) for j in range(PQ_K)]
                   for m in range(PQ_M)])
@@ -1348,9 +1142,16 @@ def _pq_lut_np(X: np.ndarray) -> np.ndarray:
     return lut
 
 
+def _pq_codes_np(X: np.ndarray) -> np.ndarray:
+    """(n, PQ_M) int codes: per subspace the first-max-wins argmax of
+    the same scores — exact twin of :func:`pq_codes_sql` (shared by
+    :func:`pq_encode_udf` and the candidate kernel)."""
+    return _pq_lut_np(X).reshape(X.shape[0], PQ_M, PQ_K).argmax(axis=2)
+
+
 def _adc_scores_np(codes: np.ndarray, LUT: np.ndarray) -> np.ndarray:
     """(n, q) ADC scores: m-ascending gather fold over the code table,
-    seeded 0.0 — the exact order of :func:`adc_score_col`."""
+    seeded 0.0 — the exact order of :data:`ADC_FOLD_SQL`."""
     n, q = codes.shape[0], LUT.shape[0]
     S = np.zeros((n, q))
     for m in range(PQ_M):
@@ -1360,18 +1161,8 @@ def _adc_scores_np(codes: np.ndarray, LUT: np.ndarray) -> np.ndarray:
 
 def _probes_np(X: np.ndarray, nprobe: int) -> np.ndarray:
     """(n, nprobe) best cells, score DESC / cell ASC — exact twin of
-    :func:`ivf_probe_udf` (stable argsort)."""
+    :func:`_ivf_probe_sql` (stable argsort)."""
     return np.argsort(-_ivf_scores_np(X), axis=1, kind="stable")[:, :nprobe]
-
-
-def _split_scan(df: DataFrame):
-    """Round-robin the corpus across defaultParallelism tasks when the
-    local scan arrives in fewer splits (the sandbox single-file case);
-    a real multi-split scan passes through untouched."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
@@ -1448,8 +1239,7 @@ def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
                  pa.array(S[rows, cols])],
                 names=["q_id", "vec_id", "score"])
 
-    src = _split_scan(emb.select("vec_id", "embedding"))
-    return src.mapInArrow(kern, schema)
+    return emb.select("vec_id", "embedding").mapInArrow(kern, schema)
 
 
 def _rank_topk(cand: DataFrame, k: int, out_name: str) -> DataFrame:

@@ -18,9 +18,9 @@ integer arithmetic both engines reproduce bit-for-bit, so estimates
 small ``w`` makes collisions (overcount > 0) actually visible in the
 fixture output — the demonstration is honest, not tuned away.
 
-The heavy-hitter report joins the shortlist (est ≥ threshold) back to
-exact counts: at scale the exact side runs only over the shortlist's
-tokens (semi-join pushdown), not the vocabulary.
+The heavy-hitter report counts tokens exactly, attaches each token's
+estimate by broadcast lookup and keeps est ≥ threshold, so the
+overcount of every reported token is visible.
 """
 
 from __future__ import annotations
@@ -49,8 +49,7 @@ def _bucket_duck(i: int, tok_expr: str) -> str:
 
 def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
                       threshold: int = CMS_THRESHOLD,
-                      cache: list | None = None,
-                      shortlist_only: bool = False) -> DataFrame:
+                      cache: list | None = None) -> DataFrame:
     """(token, est_n, exact_n, overcount) for every token whose CMS
     estimate reaches ``threshold``; est_n = min over the d row
     counters, overcount = est_n - exact_n ≥ 0 (the CMS guarantee,
@@ -83,37 +82,15 @@ def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
     # class the _PAIRS_MEMO fix closed for minhash).
     spark = docs.sparkSession
     grid_rows = grid.collect()
-
-    def attach_est(df):
-        out = df
-        for i in range(d):
-            g = spark.createDataFrame(
-                [(int(r.bucket), int(r.c)) for r in grid_rows if r.i == i],
-                f"b{i} bigint, c{i} bigint")
-            out = (out.withColumn(f"b{i}", _bucket_col(i, F.col("tok")))
-                   .join(F.broadcast(g), f"b{i}").drop(f"b{i}"))
-        return out.withColumn(
-            "est_n", F.least(*[F.col(f"c{i}") for i in range(d)]))
-
-    if shortlist_only:
-        # corpus-scale shape (VERDICT r5 #6, now code rather than a
-        # comment): the estimate is a map-side broadcast lookup, so the
-        # threshold filters the TOKEN STREAM before the exact count —
-        # the exact aggregation's shuffle carries only heavy-hitter
-        # candidates instead of the whole vocabulary.  est_n is a pure
-        # function of the token, so per-occurrence filtering drops
-        # whole tokens and the surviving counts are complete — output
-        # identical to the unfiltered arm (pytest-asserted).
-        shortlisted = attach_est(toks).filter(F.col("est_n") >= threshold)
-        return (shortlisted.groupBy("tok", "est_n")
-                .agg(F.count("*").alias("exact_n"))
-                .select(F.col("tok").alias("token"), "est_n", "exact_n",
-                        (F.col("est_n") - F.col("exact_n"))
-                        .alias("overcount")))
-    # fixture-scale ground-truth arm (the oracle's shape): exact counts
-    # over the full vocabulary, estimate attached after
-    exact = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    return (attach_est(exact)
+    out = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
+    for i in range(d):
+        g = spark.createDataFrame(
+            [(int(r.bucket), int(r.c)) for r in grid_rows if r.i == i],
+            f"b{i} bigint, c{i} bigint")
+        out = (out.withColumn(f"b{i}", _bucket_col(i, F.col("tok")))
+               .join(F.broadcast(g), f"b{i}").drop(f"b{i}"))
+    return (out.withColumn("est_n",
+                           F.least(*[F.col(f"c{i}") for i in range(d)]))
             .filter(F.col("est_n") >= threshold)
             .select(F.col("tok").alias("token"), "est_n", "exact_n",
                     (F.col("est_n") - F.col("exact_n")).alias("overcount")))

@@ -13,13 +13,13 @@ geodesy pipeline runs.  Design rules:
   token array, plus one Arrow crossing for the SimHash bit fold; the
   only remaining shuffles are the joins/aggregations that are
   inherently cross-row (band self-join, exact-dedup groupBy, pair
-  intersection).  Every kernel keeps its explode-shaped twin
-  (``kernel=False``) — the DuckDB oracle's form — pytest-asserted
-  identical.
+  intersection).  Each kernel is pytest-compared against its DuckDB
+  twin (the ``*_SQL`` / ``*_sql`` strings below, the explode-shaped
+  form of the same definition).
 * Token adjacency is FILTERED adjacency everywhere: positions are
   assigned after dropping empty tokens, so words separated by runs of
-  spaces are neighbors (kernels, twins, and oracles all agree — see
-  the r4 multispace regression test).
+  spaces are neighbors (kernels and oracles agree — see the r4
+  multispace regression test).
 * Hashes are md5-based so the DuckDB oracle reproduces them exactly
   (both engines implement ``md5`` identically; 60-bit ints are carved
   out of the hex with conv/hex-cast — kept < 2^61 so no overflow
@@ -136,8 +136,7 @@ def _hash60_batch(flat: np.ndarray, prefixes: list[str] | None):
 def _minhash_sig_kernel():
     """array<bigint>[K_MINHASH] per token list: per-batch-unique md5,
     per-doc column-wise min (min over the multiset == min over the
-    distinct set, so the array_distinct of the expression twin is
-    semantically redundant here)."""
+    distinct set, so no array_distinct is needed here)."""
     prefixes = [f"{p}:" for p in range(K_MINHASH)]
 
     @pandas_udf("array<bigint>")
@@ -152,50 +151,27 @@ def _minhash_sig_kernel():
     return _udf
 
 
-def minhash_sig_array(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def minhash_sig_array(docs: DataFrame) -> DataFrame:
     """(doc_id, sigs array<bigint>[K_MINHASH]) — MAP-ONLY (r4).
 
-    ``kernel=True`` (r6): one Arrow crossing; the md5 work runs once
-    per batch-distinct token (:func:`_hash60_batch`) instead of once
-    per (token, permutation) — measured 16.7 s → ~2 s at sf1.0, zero
-    plan change (still no Exchange).  ``kernel=False`` is the r4
-    codegen twin (one ``array_min ∘ transform`` per permutation),
-    kept as the equivalence reference; both match the exploded r3
-    form exactly (min over the same multiset of identical md5-carved
-    hashes), pytest-asserted."""
+    One Arrow crossing (r6); the md5 work runs once per batch-distinct
+    token (:func:`_hash60_batch`) instead of once per (token,
+    permutation) — measured 16.7 s → ~2 s at sf1.0, no Exchange.
+    Equal to :data:`MINHASH_SIG_SQL` (min over the same multiset of
+    identical md5-carved hashes), pytest-asserted."""
     toks_nd = "filter(split(text, ' '), t -> t <> '')"
-    if kernel:
-        return (docs.select("doc_id", F.expr(toks_nd).alias("toks"))
-                .filter(F.size("toks") > 0)
-                .select("doc_id",
-                        _minhash_sig_kernel()(F.col("toks")).alias("sigs")))
-    toks = f"array_distinct({toks_nd})"
-    sig_exprs = [
-        F.expr(f"array_min(transform(toks, t -> cast(conv(substr("
-               f"md5(concat('{p}:', t)), 1, 15), 16, 10) as bigint)))")
-        .alias(f"s{p}")
-        for p in range(K_MINHASH)]
-    return (docs.select("doc_id", F.expr(toks).alias("toks"))
+    return (docs.select("doc_id", F.expr(toks_nd).alias("toks"))
             .filter(F.size("toks") > 0)
-            .select("doc_id", F.array(*sig_exprs).alias("sigs")))
+            .select("doc_id",
+                    _minhash_sig_kernel()(F.col("toks")).alias("sigs")))
 
 
-def minhash_signatures(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, perm, sig): sig = min over DISTINCT tokens of
-    hash60(perm || ':' || token).  ``kernel=True`` derives the rows by
-    posexploding the map-only signature array (explode at OUTPUT only,
-    no shuffle); ``kernel=False`` is the r3 explode×K → groupBy twin
-    (the SQL oracle's shape), pytest-asserted identical."""
-    if kernel:
-        return minhash_sig_array(docs).select(
-            "doc_id", F.posexplode("sigs").alias("perm", "sig"))
-    t = tokens(docs).distinct()
-    perms = F.explode(F.sequence(F.lit(0), F.lit(K_MINHASH - 1))).alias("perm")
-    return (t.select("doc_id", "tok", perms)
-            .withColumn("h", hash60_col(
-                F.concat(F.col("perm").cast("string"), F.lit(":"), F.col("tok"))))
-            .groupBy("doc_id", "perm")
-            .agg(F.min("h").alias("sig")))
+    hash60(perm || ':' || token), derived by posexploding the map-only
+    signature array (explode at OUTPUT only, no shuffle)."""
+    return minhash_sig_array(docs).select(
+        "doc_id", F.posexplode("sigs").alias("perm", "sig"))
 
 
 MINHASH_SIG_SQL = f"""
@@ -263,27 +239,7 @@ def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
     # r4: the signature table is now MAP-ONLY (minhash_sig_array) —
     # the r3 groupBy(doc_id) signature-assembly exchange is gone too;
     # the banded self-join below is the plan's ONLY shuffle.
-    sig_arr = minhash_sig_array(docs)
-    band_ix = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
-    # band_key formatting is EXACTLY minhash_bands' ("%02d:%d" join ","):
-    # the two code paths and the SQL oracle stay hash-comparable (perm
-    # is the static array position here)
-    band_fmt = {
-        b: F.md5(F.concat_ws(",", *[
-            F.format_string("%02d:%d", F.lit(p),
-                            F.element_at("sigs", p + 1))
-            for p in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]))
-        for b in range(N_BANDS)}
-    band_key = F.lit(None).cast("string")
-    for b in range(N_BANDS - 1, -1, -1):
-        band_key = F.when(F.col("band") == b, band_fmt[b]) \
-            .otherwise(band_key)
-    bands = (sig_arr.select("doc_id", "sigs", band_ix)
-             .withColumn("band_key", band_key))
-    wb = Window.partitionBy("band", "band_key")
-    bands = (bands.withColumn("bsize", F.count("*").over(wb))
-             .filter(F.col("bsize") <= max_bucket).drop("bsize")
-             .persist())
+    bands = _banded_sig_frame(docs, max_bucket).persist()
     if cache is not None:
         cache.append(bands)
     eq = F.size(F.filter(
@@ -336,12 +292,6 @@ MINHASH_PAIRS_SQL = f"""
 SIMHASH_BITS = 60
 
 
-# per-row token-hash array: tokenization AND md5→60-bit carving stay
-# inside one codegen lambda — the token stream never leaves its row
-_TOK_HASH_EXPR = (
-    "transform(filter(split(text, ' '), t -> t <> ''), "
-    "t -> cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint))")
-
 
 def _simhash_kernel():
     """One Arrow crossing: per doc, hash the tokens (md5 once per
@@ -373,35 +323,20 @@ def _simhash_kernel():
     return _udf
 
 
-def simhash(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """60-bit SimHash per doc.
 
-    ``kernel=True`` (r4 default): MAP-ONLY — the codegen lambda builds
-    the token-hash array per row and one Arrow kernel folds it to the
-    fingerprint; zero Exchange in the plan.  The previous formulation
-    (``kernel=False``) exploded tokens×60 bit rows through two hash
-    aggregations — a 60× pre-agg row inflation that is pure CPU/alloc
-    overhead on a 100 TB token stream; it remains as the
-    SQL-shaped equivalence twin (the DuckDB oracle keeps that form),
-    pytest-asserted identical."""
-    if kernel:
-        tk = docs.select("doc_id", F.expr(
-            "filter(split(text, ' '), t -> t <> '')").alias("tk"))
-        return (tk.filter(F.size("tk") > 0)
-                .select("doc_id",
-                        _simhash_kernel()(F.col("tk")).alias("simhash")))
-    t = tokens(docs).withColumn("h", hash60_col(F.col("tok")))
-    bits = F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("b")
-    per_bit = (t.select("doc_id", "h", bits)
-               .withColumn("w", F.when(
-                   F.expr("shiftright(h, b) % 2") == 1, 1).otherwise(-1))
-               .groupBy("doc_id", "b")
-               .agg(F.sum("w").alias("s")))
-    return (per_bit
-            .groupBy("doc_id")
-            .agg(F.sum(F.when(F.col("s") > 0,
-                              F.expr("shiftleft(cast(1 as bigint), b)"))
-                       .otherwise(0)).alias("simhash")))
+    MAP-ONLY (r4): the codegen lambda builds the filtered token array
+    per row and one Arrow kernel hashes and folds it to the
+    fingerprint; zero Exchange in the plan.  The explode form (tokens ×
+    60 bit rows through two hash aggregations, a 60× pre-agg row
+    inflation) lives on only as the DuckDB twin :data:`SIMHASH_SQL`,
+    which pytest compares against this kernel."""
+    tk = docs.select("doc_id", F.expr(
+        "filter(split(text, ' '), t -> t <> '')").alias("tk"))
+    return (tk.filter(F.size("tk") > 0)
+            .select("doc_id",
+                    _simhash_kernel()(F.col("tk")).alias("simhash")))
 
 
 SIMHASH_SQL = f"""
@@ -643,19 +578,8 @@ for _ in range(_ROLL_BITS):
     _b = (_b * _b) % ROLL_P
 
 
-def powmod_col(k):
-    """B^k mod P as a Catalyst expression (square-and-multiply)."""
-    acc = F.lit(1).cast("bigint")
-    for j, c in enumerate(_B2J):
-        factor = (F.when(F.shiftright(k.cast("bigint"), j)
-                         .bitwiseAND(F.lit(1)) == 1, F.lit(c).cast("bigint"))
-                  .otherwise(F.lit(1).cast("bigint")))
-        acc = F.pmod(acc * factor, F.lit(ROLL_P))
-    return acc
-
-
 def powmod_sql(k_expr: str) -> str:
-    """DuckDB twin of :func:`powmod_col` (same fold order)."""
+    """B^k mod P as a DuckDB expression (square-and-multiply)."""
     acc = "cast(1 as bigint)"
     for j, c in enumerate(_B2J):
         factor = f"(case when ((({k_expr}) >> {j}) & 1) = 1 then {c} else 1 end)"
@@ -685,40 +609,22 @@ FROM (
 """
 
 
-def rolling_fingerprint(docs: DataFrame, kernel: bool = True) -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Order-sensitive polynomial rolling-hash fingerprint per doc.
 
-    ``kernel=True`` (r4): Σ th_i·B^(n−1−i) mod P is exactly a Horner
-    fold, so the whole fingerprint is ONE codegen ``aggregate()`` over
-    the per-row token array — acc·B < 2^51, no overflow — and the plan
-    is MAP-ONLY (the r3 form exploded tokens, joined the per-doc count
-    back, and aggregated: three shuffles of the full token stream).
-
-    ``kernel=False`` keeps that exploded square-and-multiply form (the
-    SQL oracle's shape; still uncapped) as the equivalence twin."""
-    if kernel:
-        toks = "filter(split(text, ' '), t -> t <> '')"
-        fp = (f"aggregate({toks}, cast(0 as bigint), (acc, t) -> "
-              f"pmod(acc * {ROLL_B} + pmod(cast(conv(substr(md5(t), 1, 15),"
-              f" 16, 10) as bigint), {ROLL_P}), {ROLL_P}))")
-        return (docs.select("doc_id", F.expr(fp).alias("rolling_fp"),
-                            F.expr(f"cast(size({toks}) as bigint)")
-                            .alias("n_tok"))
-                .filter(F.col("n_tok") > 0))
-    w = (docs.select("doc_id",
-                     F.posexplode(F.split("text", " "))
-                     .alias("raw_pos", "tok"))
-         .filter(F.col("tok") != "")
-         .withColumn("pos", F.row_number().over(
-             Window.partitionBy("doc_id").orderBy("raw_pos")) - 1))
-    n = w.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    term = (w.join(n, "doc_id")
-            .withColumn("th", F.pmod(hash60_col(F.col("tok")), F.lit(ROLL_P)))
-            .withColumn("pw", powmod_col(F.col("n_tok") - 1 - F.col("pos")))
-            .withColumn("term", F.pmod(F.col("th") * F.col("pw"), F.lit(ROLL_P))))
-    return (term.groupBy("doc_id")
-            .agg(F.pmod(F.sum("term"), F.lit(ROLL_P)).alias("rolling_fp"),
-                 F.max("n_tok").alias("n_tok")))
+    Σ th_i·B^(n−1−i) mod P is exactly a Horner fold (r4), so the whole
+    fingerprint is ONE codegen ``aggregate()`` over the per-row token
+    array — acc·B < 2^51, no overflow — and the plan is MAP-ONLY.  The
+    exploded square-and-multiply form is the DuckDB twin
+    :func:`rolling_fingerprint_sql` (uncapped, pytest-compared)."""
+    toks = "filter(split(text, ' '), t -> t <> '')"
+    fp = (f"aggregate({toks}, cast(0 as bigint), (acc, t) -> "
+          f"pmod(acc * {ROLL_B} + pmod(cast(conv(substr(md5(t), 1, 15),"
+          f" 16, 10) as bigint), {ROLL_P}), {ROLL_P}))")
+    return (docs.select("doc_id", F.expr(fp).alias("rolling_fp"),
+                        F.expr(f"cast(size({toks}) as bigint)")
+                        .alias("n_tok"))
+            .filter(F.col("n_tok") > 0))
 
 
 def rolling_fingerprint_sql() -> str:
@@ -987,56 +893,34 @@ FROM (
 """
 
 
-def repetition_ratio(docs: DataFrame, n: int = 3,
-                     kernel: bool = True) -> DataFrame:
+def repetition_ratio(docs: DataFrame, n: int = 3) -> DataFrame:
     """Fraction of a doc's word-trigram occurrences taken by its single
     most frequent trigram — the standard boilerplate/spam repetition
     signal.
 
-    ``kernel=True`` (r4): MAP-ONLY — the gram multiset is a codegen
-    sliding window over the token array and the mode count is a
-    run-length fold over the SORTED gram array (``aggregate`` with a
-    (prev, run, best) struct accumulator); zero Exchange.  The r3 form
-    (``kernel=False``) exploded tokens, positional-self-joined twice,
-    and ran two hash aggregations; it remains the equivalence twin and
-    the oracle's shape."""
-    if kernel:
-        grams = gram_window_expr(n)
-        best = (
-            "aggregate(array_sort(grams), "
-            "named_struct('prev', '', 'run', 0L, 'best', 0L), "
-            "(acc, x) -> named_struct("
-            "'prev', x, "
-            "'run', IF(x = acc.prev, acc.run + 1L, 1L), "
-            "'best', greatest(acc.best, IF(x = acc.prev, acc.run + 1L, 1L))"
-            "), acc -> acc.best)")
-        return (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
-                .select("doc_id", F.expr(grams).alias("grams"))
-                .filter(F.size("grams") > 0)
-                .select("doc_id",
-                        F.expr(best).alias("top_gram_count"),
-                        F.size("grams").cast("bigint").alias("n_grams"))
-                .withColumn("repetition_ratio",
-                            F.col("top_gram_count")
-                            / F.col("n_grams").cast("double")))
-    w = (docs.select("doc_id", F.posexplode(F.split("text", " "))
-                     .alias("raw_pos", "tok"))
-         .filter(F.col("tok") != "")
-         .withColumn("pos", F.row_number().over(
-             Window.partitionBy("doc_id").orderBy("raw_pos")) - 1))
-    g = (w.alias("w1")
-         .join(w.alias("w2"), (F.col("w1.doc_id") == F.col("w2.doc_id"))
-               & (F.col("w2.pos") == F.col("w1.pos") + 1))
-         .join(w.alias("w3"), (F.col("w1.doc_id") == F.col("w3.doc_id"))
-               & (F.col("w3.pos") == F.col("w1.pos") + 2))
-         .select(F.col("w1.doc_id").alias("doc_id"),
-                 F.concat_ws(" ", "w1.tok", "w2.tok", "w3.tok").alias("gram")))
-    per_gram = g.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
-    return (per_gram.groupBy("doc_id")
-            .agg(F.max("c").alias("top_gram_count"),
-                 F.sum("c").alias("n_grams"),
-                 (F.max("c") / F.sum("c").cast("double"))
-                 .alias("repetition_ratio")))
+    MAP-ONLY (r4): the gram multiset is a codegen sliding window over
+    the token array and the mode count is a run-length fold over the
+    SORTED gram array (``aggregate`` with a (prev, run, best) struct
+    accumulator); zero Exchange.  The positional-self-join form is the
+    DuckDB twin :func:`repetition_ratio_sql`, pytest-compared."""
+    grams = gram_window_expr(n)
+    best = (
+        "aggregate(array_sort(grams), "
+        "named_struct('prev', '', 'run', 0L, 'best', 0L), "
+        "(acc, x) -> named_struct("
+        "'prev', x, "
+        "'run', IF(x = acc.prev, acc.run + 1L, 1L), "
+        "'best', greatest(acc.best, IF(x = acc.prev, acc.run + 1L, 1L))"
+        "), acc -> acc.best)")
+    return (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
+            .select("doc_id", F.expr(grams).alias("grams"))
+            .filter(F.size("grams") > 0)
+            .select("doc_id",
+                    F.expr(best).alias("top_gram_count"),
+                    F.size("grams").cast("bigint").alias("n_grams"))
+            .withColumn("repetition_ratio",
+                        F.col("top_gram_count")
+                        / F.col("n_grams").cast("double")))
 
 
 def repetition_ratio_sql() -> str:
@@ -1099,44 +983,6 @@ def near_dup_drop_list(docs: DataFrame, est_threshold: float = 0.7,
             .agg(F.count("*").alias("n_better")))
 
 
-def _cc_label_prop(e: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation to fixpoint over the undirected edge list
-    ``e(src, dst)``.  Rounds ≈ component diameter; kept as the simple,
-    obviously-correct twin of :func:`_cc_star` (pytest asserts they
-    agree on a long-chain fixture).  Returns (doc_id, label)."""
-    edges = (e.unionByName(e.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-             .distinct().localCheckpoint(eager=False))
-    labels = (edges.select("src").distinct()
-              .select(F.col("src").alias("doc_id"),
-                      F.col("src").alias("label")))
-    changed = -1
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges.dst == labels.doc_id)
-                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(nbr_min, labels.doc_id == nbr_min.src,
-                                  "left")
-                      .select(F.col("doc_id"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nbr_label"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=False))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected components (label prop): not converged after "
-            f"{max_iter} rounds ({changed} labels still changing); "
-            f"component diameter exceeds max_iter — raise max_iter or "
-            f"use the default large-star/small-star algorithm")
-    return labels
-
-
 def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
     """Large-star / small-star connected components (the O(log n)-round
     alternating algorithm from the MapReduce CC literature) — the r4
@@ -1151,19 +997,18 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
       the minimum of them.
 
     Both steps are one groupBy(min) + one equi-join per round — the
-    same shuffle shape as a label-prop round, just fewer rounds.
+    same shuffle shape as a label-propagation round, just fewer rounds.
     Fixpoint = a star forest rooted at each component's min id.
-    Returns (doc_id, label); output contract (and the WITH RECURSIVE
-    oracle) identical to :func:`_cc_label_prop`.
+    Returns (doc_id, label), the WITH RECURSIVE oracle's contract
+    (:func:`near_dup_components_sql`).
 
     Measured tradeoff (sf0.1, local[16]): on the real near-dup graph
-    (shallow, diameter ~3) star runs ~2× label-prop's wall (more jobs
-    per round: two star steps + dedups) — the constant-factor price of
-    the O(log n)-rounds guarantee that label propagation lacks on
-    long-diameter graphs, where its round count (and wall) is
-    unbounded.  Default = star because worst-case robustness is what
-    matters at 10¹² docs; callers with known-shallow graphs can pass
-    ``algorithm='labelprop'``."""
+    (shallow, diameter ~3) star ran ~2× min-label propagation's wall
+    (more jobs per round: two star steps + dedups) — the
+    constant-factor price of the O(log n)-rounds guarantee that label
+    propagation lacks on long-diameter graphs, where its round count
+    (and wall) is unbounded; worst-case robustness is what matters at
+    10¹² docs."""
     # canonical storage: (u, v) with u < v, deduped
     edges = (e.filter(F.col("src") != F.col("dst"))
              .select(F.least("src", "dst").alias("u"),
@@ -1216,32 +1061,23 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
 
 def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
                         pairs: DataFrame | None = None,
-                        max_iter: int = 25,
-                        algorithm: str = "star") -> DataFrame:
+                        max_iter: int = 25) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup graph —
     the clustering step real dedup pipelines run between candidate
     pairs and the keep-one-per-cluster decision (each component gets
-    the MIN doc_id in it as its label).
-
-    ``algorithm='star'`` (default, r4): large-star/small-star
-    alternation — O(log n) rounds on any graph shape, the 10¹²-row
-    answer.  ``algorithm='labelprop'``: min-label propagation to
-    fixpoint (rounds ≈ diameter) — kept as the simple equivalence twin.
+    the MIN doc_id in it as its label), by large-star/small-star
+    alternation (:func:`_cc_star`, r4) — O(log n) rounds on any graph
+    shape, the 10¹²-row answer.
 
     Iterative → registered as an oracle via DuckDB WITH RECURSIVE
     reachability (min reachable id ≡ component min on symmetric
     edges).  Output: one row per doc that belongs to a component of
     size ≥ 2 — (doc_id, component, is_kept)."""
-    if algorithm not in ("star", "labelprop"):
-        raise ValueError(
-            f"near_dup_components: unknown algorithm {algorithm!r} "
-            f"(use 'star' or 'labelprop')")
     if pairs is None:
         pairs = minhash_pairs(docs)
     e = (pairs.filter(F.col("est_jaccard") >= est_threshold)
          .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
-    cc = _cc_star if algorithm == "star" else _cc_label_prop
-    labels = cc(e, max_iter)
+    labels = _cc_star(e, max_iter)
     return labels.select(
         "doc_id", F.col("label").alias("component"),
         (F.col("doc_id") == F.col("label")).alias("is_kept"))
@@ -1383,7 +1219,10 @@ GROUP BY drop_doc_id
 def _banded_sig_frame(docs: DataFrame,
                       max_bucket: int = MAX_BUCKET) -> DataFrame:
     """(doc_id, sigs, band, band_key) with degenerate buckets dropped —
-    the shared band-table shape of minhash_pairs, reusable per side."""
+    the band table of minhash_pairs and of each incremental-dedup side.
+    band_key formatting is EXACTLY minhash_bands' ("%02d:%d" join ","),
+    so the band tables and the SQL oracle stay hash-comparable (perm is
+    the static array position here)."""
     sig_arr = minhash_sig_array(docs)
     band_ix = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
     band_fmt = {

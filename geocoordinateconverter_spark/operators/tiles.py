@@ -91,35 +91,18 @@ def salted_tile_agg(points: DataFrame, key: str, fi: str = "fi",
 
 def tile_topk_points(points: DataFrame, key: str, fi: str = "fi",
                      la: str = "la", value: str = "h", res: int = 5,
-                     k: int = 3, grouped_map: bool = False) -> DataFrame:
+                     k: int = 3) -> DataFrame:
     """Per-tile top-k points by ``value`` (ties by key asc, so the
     SQL-window oracle matches exactly).
 
-    r6 default: a codegen window top-k — ONE exchange on cell, no
-    Python.  The r5 grouped-map ``applyInPandas`` form (SURVEY.md §3.6
-    "grouped-map applyInPandas for per-tile ops") invoked Python once
-    PER TILE: ~3 ms of pandas overhead × |cells| dominated the query
-    (measured 30 s vs ~1 s at sf0.1 — exactly the guide §2.3 warning
-    that grouped-map ships and handles every row through Python).  It
-    stays available as ``grouped_map=True`` — the per-tile custom-
-    operator slot for logic a window genuinely can't express (model
-    fits, hull builds, resampling) — and the pytest asserts the two
-    forms emit identical rows."""
+    A codegen window top-k (r6) — ONE exchange on cell, no Python.  Not
+    a grouped-map ``applyInPandas``: that calls Python once PER TILE,
+    and ~3 ms of pandas overhead × |cells| dominated the query (measured
+    30 s vs ~1 s at sf0.1 — the guide §2.3 warning that grouped-map
+    ships and handles every row through Python)."""
     from ..kernels import cell_col
 
     pts = points.withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-    if grouped_map:
-        import pandas as pd
-
-        def _topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = pdf.sort_values([value, key],
-                                  ascending=[False, True]).head(k)
-            out = out.copy()
-            out["rk"] = range(1, len(out) + 1)
-            return out[["cell", key, value, "rk"]]
-
-        schema = f"cell bigint, {key} bigint, {value} double, rk int"
-        return pts.groupBy("cell").applyInPandas(_topk, schema)
     w = Window.partitionBy("cell").orderBy(F.col(value).desc(),
                                            F.col(key).asc())
     return (pts.withColumn("rk", F.row_number().over(w))

@@ -3,12 +3,12 @@
 The engine's production input is an Iceberg table of Common-Crawl-style
 pages ``(url, warc_ts, html, text, lang)`` at 10¹²-document scale
 (BASELINE.json input_hint).  No Iceberg catalog exists in this sandbox,
-so :func:`webpages_df` materializes the FIXTURES.md §1 synthetic
-analogue **deterministically from the driver's read-only
-``documents.parquet``** — every derived value is pure integer/float
-arithmetic + ``printf``-style formatting on ``doc_id``/``text``, so the
-DuckDB oracle reproduces the table bit-for-bit with the SQL twin
-:func:`webpages_sql`.
+so :func:`webpages_sql` derives the FIXTURES.md §1 synthetic analogue
+**deterministically from the registered ``documents`` view** — every
+derived value is pure integer/float arithmetic + ``printf``-style
+formatting on ``doc_id``/``text``, and the one dialect-neutral SQL
+string runs unchanged on Spark and on the DuckDB oracle, so both
+reproduce the table bit-for-bit.
 
 Coordinate mentions embedded in ``text`` follow the reference's
 free-format parser surface (gk-slo.c + util.c — SURVEY.md §3.1 S2):
@@ -24,7 +24,6 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as sg
@@ -89,12 +88,6 @@ def webpages_sql(documents: str = "documents") -> str:
         lang
  FROM {documents})
 """
-
-
-def webpages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("documents")
-    return spark.sql(f"SELECT * FROM {webpages_sql('documents')} w")
 
 
 # ---------------------------------------------------------------------------

@@ -156,15 +156,28 @@ def test_salt_factor_detects_hot_cell(spark, skewed_pts):
 
 
 def test_dot_udf_matches_unrolled(spark):
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(200)
-    pairs = (emb.alias("a").crossJoin(emb.alias("b").limit(5))
-             .select(F.col("a.embedding").alias("ea"),
-                     F.col("b.embedding").alias("eb")))
-    unrolled = pairs.select(sim.dot_col("ea", "eb").alias("d")).toPandas()
-    udf = sim.dot_pandas_udf()
-    via_udf = pairs.select(udf(F.col("ea"), F.col("eb")).alias("d")).toPandas()
-    np.testing.assert_array_equal(unrolled["d"].to_numpy(),
-                                  via_udf["d"].to_numpy())
+    """The fold the ANN Arrow kernel runs (``_fold_dot_mat``), the
+    unrolled Catalyst dot product (cosine near-dup, IVF-PQ rerank) and
+    the DuckDB twin's list_reduce fold are bit-identical."""
+    from tests.duckdb_twin import assert_matches_twin
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    pairs = (emb.filter("vec_id < 200").alias("a")
+             .crossJoin(emb.filter("vec_id < 5").alias("b"))
+             .select(F.col("a.vec_id").alias("id_a"),
+                     F.col("b.vec_id").alias("id_b"),
+                     sim.dot_col("a.embedding", "b.embedding").alias("d")))
+    got = assert_matches_twin(
+        pairs,
+        f"SELECT a.vec_id AS id_a, b.vec_id AS id_b, "
+        f"{sim.dot_sql('a.embedding', 'b.embedding')} AS d "
+        f"FROM embeddings a, embeddings b "
+        f"WHERE a.vec_id < 200 AND b.vec_id < 5", SF_SMOKE, min_rows=1000)
+    vecs = {r.vec_id: np.asarray(r.embedding, np.float64)
+            for r in emb.filter("vec_id < 200").collect()}
+    X = np.stack([vecs[i] for i in got["id_a"]])
+    Q = np.stack([vecs[i] for i in got["id_b"]])
+    folded = np.diag(sim._fold_dot_mat(X, Q))
+    np.testing.assert_array_equal(folded, got["d"].to_numpy())
 
 
 def test_rolling_fingerprint_uncapped(spark):

@@ -6,6 +6,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from tests.duckdb_twin import assert_matches_twin
+
+SF_SMOKE = "/root/testdata/sf0.001"
+
 
 def test_ivf_train_kmeans_exact_matches_numpy_bitwise(spark):
     """The fixed-point trainer is EXACT: Spark output must equal the
@@ -28,17 +32,14 @@ def test_ivf_train_kmeans_exact_matches_numpy_bitwise(spark):
 
 
 def test_cc_star_long_chain_and_equivalence(spark):
-    """A 41-node path graph has diameter 40: label propagation needs
-    40 rounds (here given 60), while large-star/small-star must
-    converge within 25 — and both must emit identical labels (the
-    component min)."""
+    """A 41-node path graph has diameter 40: label propagation would
+    need 40 rounds, while large-star/small-star must converge within
+    25 — and emit the component min as every node's label."""
     from geocoordinateconverter_spark.operators import textdedup as td
     e = spark.createDataFrame([(i, i + 1) for i in range(40)],
                               "src long, dst long")
     star = {(r.doc_id, r.label) for r in td._cc_star(e, 25).collect()}
-    prop = {(r.doc_id, r.label)
-            for r in td._cc_label_prop(e, 60).collect()}
-    assert star == prop == {(i, 0) for i in range(41)}
+    assert star == {(i, 0) for i in range(41)}
     # two disjoint components keep distinct roots
     e2 = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
                                "src long, dst long")
@@ -47,31 +48,27 @@ def test_cc_star_long_chain_and_equivalence(spark):
 
 
 def test_near_dup_components_algorithms_agree(spark):
-    """The registered query (star default) and the label-prop twin
-    produce identical (doc_id, component, is_kept) rows on the real
-    near-dup graph."""
+    """The star-contraction components equal the DuckDB twin's
+    WITH RECURSIVE reachability (component = min reachable id) on the
+    real near-dup graph."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
             .select("doc_id", "text"))
-    pairs = td.minhash_pairs(docs)
-    a = {tuple(r) for r in td.near_dup_components(
-        docs, pairs=pairs, algorithm="star").collect()}
-    b = {tuple(r) for r in td.near_dup_components(
-        docs, pairs=pairs, algorithm="labelprop").collect()}
-    assert a == b and len(a) > 0
+    cache: list = []
+    got = td.near_dup_components(docs, pairs=td.minhash_pairs(docs,
+                                                              cache=cache))
+    assert_matches_twin(got, td.near_dup_components_sql(), SF_SMOKE)
+    cache[0].unpersist()
 
 
 def test_minhash_sig_kernel_matches_explode_form(spark):
-    """Map-only signature array vs the explode×K → groupBy twin:
-    identical (doc_id, perm, sig) rows."""
+    """Map-only signature array vs the explode×K → groupBy DuckDB twin
+    (MINHASH_SIG_SQL): identical (doc_id, perm, sig) rows."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
             .select("doc_id", "text"))
-    a = {(r.doc_id, r.perm): r.sig
-         for r in td.minhash_signatures(docs, kernel=True).collect()}
-    b = {(r.doc_id, r.perm): r.sig
-         for r in td.minhash_signatures(docs, kernel=False).collect()}
-    assert a == b and len(a) > 0
+    assert_matches_twin(td.minhash_signatures(docs), td.MINHASH_SIG_SQL,
+                        SF_SMOKE)
 
 
 def test_minhash_sig_array_plan_is_map_only(spark):
@@ -84,49 +81,41 @@ def test_minhash_sig_array_plan_is_map_only(spark):
 
 
 def test_repetition_ratio_kernel_matches_explode_form(spark):
-    """Run-length-fold mode count == the exploded two-agg form, and
-    the kernel plan has no Exchange."""
+    """Run-length-fold mode count == the DuckDB twin's exploded
+    positional-self-join + two-agg form, and the kernel plan has no
+    Exchange."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
             .select("doc_id", "text"))
-    a = {r.doc_id: (r.top_gram_count, r.n_grams, r.repetition_ratio)
-         for r in td.repetition_ratio(docs, kernel=True).collect()}
-    b = {r.doc_id: (r.top_gram_count, r.n_grams, r.repetition_ratio)
-         for r in td.repetition_ratio(docs, kernel=False).collect()}
-    assert a == b and len(a) > 0
+    assert_matches_twin(td.repetition_ratio(docs), td.repetition_ratio_sql(),
+                        SF_SMOKE)
     plan = (td.repetition_ratio(docs)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
 
 
 def test_rolling_fp_horner_matches_explode_form(spark):
-    """Horner-fold fingerprint == the exploded square-and-multiply
-    form, doc for doc (same mod field, so equality is exact)."""
+    """Horner-fold fingerprint == the DuckDB twin's exploded
+    square-and-multiply form, doc for doc (same mod field, so equality
+    is exact)."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
             .select("doc_id", "text"))
-    a = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=True).collect()}
-    b = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=False).collect()}
-    assert a == b and len(a) > 0
+    assert_matches_twin(td.rolling_fingerprint(docs),
+                        td.rolling_fingerprint_sql(), SF_SMOKE)
     plan = (td.rolling_fingerprint(docs)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
 
 
 def test_simhash_kernel_matches_explode_form(spark):
-    """The map-only Arrow kernel and the explode×60 SQL-shaped form
-    must emit identical fingerprints for every doc (exact integer
-    semantics, so equality is bitwise, not approximate)."""
+    """The map-only Arrow kernel and the explode×60 DuckDB twin
+    (SIMHASH_SQL) must emit identical fingerprints for every doc
+    (exact integer semantics, so equality is bitwise)."""
     from geocoordinateconverter_spark.operators import textdedup as td
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
             .select("doc_id", "text"))
-    a = {r.doc_id: r.simhash
-         for r in td.simhash(docs, kernel=True).collect()}
-    b = {r.doc_id: r.simhash
-         for r in td.simhash(docs, kernel=False).collect()}
-    assert a == b and len(a) > 0
+    assert_matches_twin(td.simhash(docs), td.SIMHASH_SQL, SF_SMOKE)
 
 
 def test_simhash_kernel_plan_is_map_only(spark):
@@ -164,19 +153,20 @@ def test_dms_negative_coordinates(spark):
 
 
 def test_knn_cellring_out_of_bbox_points(spark):
-    """Out-of-bbox points take the exact broadcast candidate set (the
-    ring-radius bound is proven over the bbox only): cellring must
-    equal the brute-force path row-for-row on a mixed in/out input."""
+    """Out-of-bbox points (the input the removed cell-ring kNN needed
+    an exact fallback for): the kernel must equal the brute-force
+    cross-join oracle row-for-row, dist2 included, on a mixed in/out
+    input."""
     from geocoordinateconverter_spark.operators import knn as knn_op
     rows = [(0, 46.1, 14.5), (1, 46.8, 15.9),     # in bbox
             (2, 49.0, 14.5), (3, 46.1, 19.5),     # out (north / east)
-            (4, 43.9, 12.9), (5, 47.9, 17.1)]     # out (south-west / ne)
+            (4, 43.9, 12.9), (5, 47.9, 17.1),     # out (south-west / ne)
+            (6, -46.1, -14.5)]                    # negative coordinates
     pts = spark.createDataFrame(rows, "k long, fi double, la double")
-    ring = {(r.k, r.rk): r.station_id for r in knn_op.knn_join(
-        pts, spark, key="k", k=3, method="cellring").collect()}
-    brute = {(r.k, r.rk): r.station_id for r in knn_op.knn_join(
-        pts, spark, key="k", k=3, method="broadcast").collect()}
-    assert ring == brute and len(ring) == 6 * 3
+    got = (knn_op.knn_join(pts, spark, key="k", k=3)
+           .select("k", "station_id", "dist2", "rk"))
+    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k", 3),
+                        {"pts": pts}, min_rows=len(rows) * 3)
 
 
 def test_checkpoint_torn_manifest_recommits(spark, tmp_path_factory):

@@ -104,39 +104,35 @@ def test_multispace_adjacency_kernel_twin_oracle_agree(spark):
     """Regression for the r4 review finding: on texts with runs of
     spaces, the positional twins/oracles used RAW split positions
     (breaking adjacency and even producing negative rolling-hash
-    exponents) while the kernels use filtered adjacency.  All three
-    paths — kernel, twin, DuckDB oracle — must now agree on the
-    filtered-adjacency semantics."""
+    exponents) while the kernels use filtered adjacency.  Each kernel
+    and its DuckDB twin must now agree on the filtered-adjacency
+    semantics."""
     import duckdb
     import pandas as pd
+
+    from tests.duckdb_twin import assert_matches_twin
 
     rows = [(0, "a  b c"), (1, "  x y  z  "), (2, "p q r s"),
             (3, "one"), (4, ""), (5, "t  t t   t")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    tables = {"documents": pd.DataFrame(rows, columns=["doc_id", "text"])}
 
-    # rolling fingerprint: kernel == twin == oracle
-    k = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=True).collect()}
-    t = {r.doc_id: (r.rolling_fp, r.n_tok)
-         for r in td.rolling_fingerprint(docs, kernel=False).collect()}
-    o = {int(r[0]): (int(r[1]), int(r[2]))
-         for r in con.execute(td.rolling_fingerprint_sql()).fetchall()}
-    assert k == t == o and len(k) == 5
-
-    # repetition ratio: kernel == twin == oracle
-    k = {r.doc_id: (r.top_gram_count, r.n_grams)
-         for r in td.repetition_ratio(docs, kernel=True).collect()}
-    t = {r.doc_id: (r.top_gram_count, r.n_grams)
-         for r in td.repetition_ratio(docs, kernel=False).collect()}
-    o = {int(r[0]): (int(r[1]), int(r[2]))
-         for r in con.execute(td.repetition_ratio_sql()).fetchall()}
+    assert_matches_twin(td.rolling_fingerprint(docs),
+                        td.rolling_fingerprint_sql(), tables, min_rows=5)
+    assert_matches_twin(td.simhash(docs), td.SIMHASH_SQL, tables,
+                        min_rows=5)
+    assert_matches_twin(td.minhash_signatures(docs), td.MINHASH_SIG_SQL,
+                        tables, min_rows=5 * td.K_MINHASH)
+    k = assert_matches_twin(td.repetition_ratio(docs),
+                            td.repetition_ratio_sql(), tables)
+    k = {r.doc_id: (r.top_gram_count, r.n_grams) for r in k.itertuples()}
     # docs 0,1,2,5 have ≥3 tokens after filtering
-    assert k == t == o and set(k) == {0, 1, 2, 5}
+    assert set(k) == {0, 1, 2, 5}
     assert k[0] == (1, 1)       # 'a b c' — one trigram
     assert k[5] == (2, 2)       # 't t t' twice
 
+    con = duckdb.connect()
+    con.register("documents", tables["documents"])
     # n-gram jaccard: kernel path vs oracle on the same table
     kj = {(r.doc_a, r.doc_b): r.n_inter
           for r in td.ngram_jaccard_pairs(docs).collect()}

@@ -10,46 +10,53 @@ from geocoordinateconverter_spark.operators import knn as knn_op
 from geocoordinateconverter_spark.operators import multimodal as mm
 from geocoordinateconverter_spark.operators import textdedup as td
 from geocoordinateconverter_spark.sources import shapefile as shp
+from tests.duckdb_twin import assert_matches_twin
 
 
-# ---- knn cellring: gated cartesian fallback + explicit NULL rule ---------
+# ---- cell-ring pruned join: gated cartesian fallback + NULL rule ---------
 
 def _mk_pts(spark, rows):
     return spark.createDataFrame(rows, "k bigint, fi double, la double")
 
 
 def test_cellring_all_in_bbox_plan_has_no_bnlj(spark):
-    """ADVICE r4: with every point in the working bbox the cartesian
-    fallback must be gated OUT — no BroadcastNestedLoopJoin branch."""
+    """ADVICE r4: with every point in the working bbox the cell-ring
+    pruned radius join must gate its cartesian fallback OUT — no
+    BroadcastNestedLoopJoin branch."""
     rows = [(i, 45.6 + 0.001 * i, 14.2 + 0.001 * i) for i in range(50)]
-    out = knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                          method="cellring")
+    out = knn_op.radius_join(_mk_pts(spark, rows), spark, radius=2.0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
-    assert out.count() == 50 * 3
+    assert out.count() > 0
 
 
 def test_cellring_out_of_bbox_rows_still_exact(spark):
-    rows = [(1, 45.6, 14.2), (2, 10.0, 100.0)]  # one far outside
-    out = (knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                           method="cellring")
-           .select("k", "station_id", "rk").toPandas()
-           .sort_values(["k", "rk"]))
-    ref = (knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                           method="broadcast")
-           .select("k", "station_id", "rk").toPandas()
-           .sort_values(["k", "rk"]))
-    np.testing.assert_array_equal(out.to_numpy(), ref.to_numpy())
+    """Points outside the bbox (cells.encode clips them into edge
+    cells) take the exact fallback: the radius join and the kNN kernel
+    both equal their brute-force DuckDB twins."""
+    rows = [(1, 45.6, 14.2), (2, 10.0, 100.0),   # in / far outside
+            (3, 48.3, 15.0)]                      # just north of it
+    pts = _mk_pts(spark, rows)
+    assert_matches_twin(
+        knn_op.radius_join(pts, spark, radius=2.0)
+        .select("k", "station_id", "dist2"),
+        knn_op.radius_oracle_sql("pts", "k", radius=2.0), {"pts": pts},
+        min_rows=25 + 9)
+    assert_matches_twin(
+        knn_op.knn_join(pts, spark, key="k", k=3)
+        .select("k", "station_id", "dist2", "rk"),
+        knn_op.knn_oracle_sql("pts", "k", 3), {"pts": pts}, min_rows=3 * 3)
 
 
 def test_null_coords_excluded_by_every_method(spark):
-    """r5 review: the NULL rule must hold for ALL three strategies
-    (kernel/broadcast previously emitted NaN/NULL-dist2 rows)."""
+    """r5 review: the NULL rule must hold for both station joins
+    (kNN used to emit NaN/NULL-dist2 rows)."""
     rows = [(1, 45.6, 14.2), (2, None, 14.2), (3, 45.6, None)]
-    for method in ("kernel", "broadcast", "cellring"):
-        out = knn_op.knn_join(_mk_pts(spark, rows), spark, key="k", k=3,
-                              method=method)
-        assert sorted(set(r.k for r in out.collect())) == [1], method
+    pts = _mk_pts(spark, rows)
+    for name, out in (
+            ("knn", knn_op.knn_join(pts, spark, key="k", k=3)),
+            ("radius", knn_op.radius_join(pts, spark, radius=2.0))):
+        assert sorted(set(r.k for r in out.collect())) == [1], name
 
 
 # ---- simhash banded-frame persist contract -------------------------------

@@ -6,9 +6,9 @@ Two layers of evidence:
 * fold-level — the NumPy rank-1-update fold produces the same float64s
   as a strictly sequential per-pair left fold (NumPy elementwise ops
   neither fuse nor reassociate);
-* operator-level — each rewritten top-k operator's full output equals
-  the r5 join/window formulation, rebuilt here verbatim as the
-  reference twin, on the smoke fixture.
+* operator-level — each rewritten operator's full output equals the
+  r5 join/window formulation (rebuilt here from the Catalyst dot
+  expression, or the operator's DuckDB twin) on the smoke fixture.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from geocoordinateconverter_spark.operators import similarity as sim
+from tests.duckdb_twin import assert_matches_twin
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -64,28 +65,6 @@ def _legacy_brute(emb, k=5, query_filter="vec_id % 50 = 0"):
                     F.round("cos", 9).alias("cos_sim")))
 
 
-def _legacy_ivfpq(emb, k=5, nprobe=3, query_filter="vec_id % 50 = 0"):
-    corpus = (emb
-              .withColumn("cluster", sim.ivf_cluster_udf()(F.col("embedding")))
-              .withColumn("codes", sim.pq_encode_udf()(F.col("embedding")))
-              .select("vec_id", "cluster", "codes"))
-    q = (emb.filter(query_filter)
-         .withColumn("probes", sim.ivf_probe_udf(nprobe)(F.col("embedding")))
-         .withColumn("q_lut", sim.pq_lut_udf()(F.col("embedding")))
-         .select(F.col("vec_id").alias("q_id"), "q_lut",
-                 F.explode("probes").alias("q_cluster")))
-    cand = (corpus.join(F.broadcast(q),
-                        (F.col("cluster") == F.col("q_cluster"))
-                        & (F.col("vec_id") != F.col("q_id")))
-            .withColumn("adc", sim.adc_score_col()))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(),
-                                           F.col("vec_id").asc())
-    return (cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("q_id", "vec_id", "rk",
-                    F.round("adc", 9).alias("adc_score")))
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -99,56 +78,29 @@ def test_brute_force_kernel_equals_legacy(spark, qf):
 
 
 def test_ivfpq_kernel_equals_legacy(spark):
-    emb = _emb(spark)
-    new = _rows(sim.ivfpq_topk(emb, k=5, nprobe=3))
-    old = _rows(_legacy_ivfpq(emb, k=5, nprobe=3))
-    assert new == old and len(new) > 0
+    # the r5 form (IVF cell equi-join over the nprobe probes, ADC fold
+    # per pair, window rank) is the DuckDB twin ivfpq_topk_sql
+    got = sim.ivfpq_topk(_emb(spark), k=5, nprobe=3)
+    assert_matches_twin(got, sim.ivfpq_topk_sql(k=5, nprobe=3), SF_SMOKE)
 
 
-def test_cms_shortlist_arm_equals_full(spark):
-    # the corpus-scale arm (threshold filters the token stream before
-    # the exact aggregation) must emit the identical report, and its
-    # plan must place the filter below the exact count (one grouped
-    # aggregate over the shortlist, not the vocabulary)
-    from geocoordinateconverter_spark.operators import sketch as sk
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    full = _rows(sk.cms_heavy_hitters(docs))
-    short = sk.cms_heavy_hitters(docs, shortlist_only=True)
-    assert _rows(short) == full and len(full) > 0
-    plan = short._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.index("least(") > plan.index("count(1)") or \
-        "Filter" in plan  # filter precedes the exact aggregate
-
-
-def test_pagerank_join_strategies_identical(spark):
-    from geocoordinateconverter_spark.operators import graph as gr
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    a = _rows(gr.pagerank_hosts(orders, spark, rank_broadcast=True))
-    b = _rows(gr.pagerank_hosts(orders, spark, rank_broadcast=False))
-    assert a == b and len(a) == gr.N_HOSTS
-
-
-def test_token_budget_subbucket_decomposition(spark):
+def test_token_budget_subbucket_decomposition(spark, monkeypatch):
     # the de-skewed two-level running sum must equal the single-window
     # form at a sub-bucket width small enough to split every score
-    import os
     from geocoordinateconverter_spark.operators import curation as cu
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     base = _rows(cu.token_budget_select(docs))
-    os.environ["SPARK_GRAFT_BUDGET_SUB_WIDTH"] = "64"
-    try:
-        split = _rows(cu.token_budget_select(docs))
-    finally:
-        del os.environ["SPARK_GRAFT_BUDGET_SUB_WIDTH"]
+    monkeypatch.setattr(cu, "BUDGET_SUB_WIDTH", 64)
+    split = _rows(cu.token_budget_select(docs))
     assert split == base and len(base) > 0
 
 
 def test_decontaminate_kernel_equals_join_form(spark):
+    # the r5 broadcast-join + countDistinct form is the DuckDB twin
     from geocoordinateconverter_spark.operators import curation as cu
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    a = _rows(cu.decontaminate(docs, kernel=True))
-    b = _rows(cu.decontaminate(docs, kernel=False))
-    assert a == b and len(a) > 0
+    assert_matches_twin(cu.decontaminate(docs), cu.decontaminate_sql(),
+                        SF_SMOKE)
 
 
 def test_minhash_sig_kernel_arrow_node(spark):
@@ -162,17 +114,33 @@ def test_minhash_sig_kernel_arrow_node(spark):
     assert "Exchange" not in plan
 
 
-def test_tile_topk_window_equals_grouped_map(spark):
+def test_tile_topk_window_matches_oracle(spark):
+    import __spark_entry__ as em
     from geocoordinateconverter_spark.operators import tiles as tl
-    pts = (spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-           .selectExpr("o_orderkey as k",
-                       "45.5 + (o_orderkey % 97) / 100.0 as fi",
-                       "14.2 + (o_orderkey % 83) / 100.0 as la",
-                       "cast(o_orderkey % 1000 as double) as h"))
-    a = _rows(tl.tile_topk_points(pts, key="k", res=5, k=3))
-    b = _rows(tl.tile_topk_points(pts, key="k", res=5, k=3,
-                                  grouped_map=True))
-    assert a == b and len(a) > 0
+    em._register(spark, SF_SMOKE)
+    pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
+    got = tl.tile_topk_points(pts, key="k", res=5, k=3)
+    assert_matches_twin(got, em.oracle_sql()["tile_topk_window"], SF_SMOKE)
+
+
+def test_register_memo_is_session_scoped(spark):
+    # temp views are session state: a newSession() shares the
+    # applicationId but none of the views, so _register and the shared
+    # band-table memo must key on the session itself (ADVICE r6 #1)
+    import __spark_entry__ as em
+    em._register(spark, SF_SMOKE)
+    s2 = spark.newSession()
+    em._register(s2, SF_SMOKE)
+    for t in em.TABLES:
+        assert s2.catalog.tableExists(t), t
+    assert (s2.table("documents").rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
+    pairs = em.queries()["minhash_lsh_pairs"]
+    try:
+        assert pairs(spark, SF_SMOKE).sparkSession is spark
+        assert pairs(s2, SF_SMOKE).sparkSession is s2
+    finally:
+        em.clear_pair_memos()
 
 
 def test_ngram_jaccard_block_join_equals_residual_form(spark):

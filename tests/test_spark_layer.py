@@ -12,6 +12,7 @@ from geocoordinateconverter_spark import cells, kernels
 from geocoordinateconverter_spark import geodesy as g
 from geocoordinateconverter_spark.operators import knn as knn_op
 from geocoordinateconverter_spark.operators import pip as pip_op
+from tests.duckdb_twin import assert_matches_twin
 
 N = 5000
 rng = np.random.default_rng(11)
@@ -108,39 +109,27 @@ def test_raycast_concave_polygon(spark):
 
 
 def test_knn_methods_agree(spark, pts_df):
-    """kernel (zero-shuffle) ≡ cellring ≡ broadcast row-for-row, with
-    bit-identical dist2 (same IEEE op sequence in all three)."""
-    cols = ["k", "station_id", "dist2", "rk"]
-    a = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="broadcast")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    b = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="cellring")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    c = (knn_op.knn_join(pts_df, spark, key="k", k=3, method="kernel")
-         .select(*cols).toPandas()
-         .sort_values(["k", "rk"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)  # exact, incl. float64 dist2
+    """The zero-shuffle kernel ≡ the brute-force cross-join + window
+    DuckDB twin row-for-row, with bit-identical dist2 (same IEEE op
+    sequence)."""
+    got = (knn_op.knn_join(pts_df, spark, key="k", k=3)
+           .select("k", "station_id", "dist2", "rk"))
+    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k", 3),
+                        {"pts": pts_df}, min_rows=N * 3)
 
 
 def test_radius_join_methods_agree(spark, pts_df):
-    """cellprune (equi-join pruned) ≡ broadcast (unpruned) row-for-row
-    with bit-identical dist2; out-of-bbox rows take the exact fallback;
-    NULL-coordinate rows are excluded by every method."""
+    """The cell-pruned equi-join ≡ the unpruned cross-join DuckDB twin
+    row-for-row with bit-identical dist2; out-of-bbox rows take the
+    exact fallback; NULL-coordinate rows are excluded."""
     extra = spark.createDataFrame(
         [(90001, 48.5, 15.0, 100.0),       # out of bbox (north)
          (90002, None, 14.5, 100.0)],      # NULL fi → excluded
         "k long, fi double, la double, h double")
     pts = pts_df.unionByName(extra)
-    cols = ["k", "station_id", "dist2"]
-    a = (knn_op.radius_join(pts, spark, method="broadcast")
-         .select(*cols).toPandas()
-         .sort_values(["k", "station_id"]).reset_index(drop=True))
-    b = (knn_op.radius_join(pts, spark, method="cellprune")
-         .select(*cols).toPandas()
-         .sort_values(["k", "station_id"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)  # exact, incl. float64 dist2
+    a = assert_matches_twin(
+        knn_op.radius_join(pts, spark).select("k", "station_id", "dist2"),
+        knn_op.radius_oracle_sql("pts", "k"), {"pts": pts})
     assert 90002 not in set(a["k"])
     # every emitted pair satisfies the predicate; brute-force recount
     pos = knn_op.station_positions(25)
@@ -209,7 +198,7 @@ def test_height_mode_wrapper(spark, pts_df):
 
 def test_knn_kernel_plan_has_no_exchange(spark, pts_df):
     """the kernel path must be a pure map: no Exchange in the plan."""
-    df = knn_op.knn_join(pts_df, spark, key="k", k=3, method="kernel")
+    df = knn_op.knn_join(pts_df, spark, key="k", k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan

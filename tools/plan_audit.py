@@ -55,9 +55,7 @@ def main() -> None:
 
     pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
     plans["knn_join (kernel, zero-shuffle)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3, method="kernel"))
-    plans["knn_join (broadcast oracle twin)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3, method="broadcast"))
+        knn_op.knn_join(pts, spark, key="k", k=3))
 
     pruned = (spark.table("lineitem")
               .filter(F.col("l_shipdate") <= F.lit("1995-01-01"))
@@ -103,22 +101,9 @@ def main() -> None:
                    and "ArrowEvalPython" in mh))
 
     # ---- global sweep: no BNLJ/Cartesian in ANY registered query ------
-    # Exceptions (intentional, documented):
-    #   ann_cosine_topk — the declared brute-force ANN baseline: tiny
-    #   broadcast query set vs streamed corpus; the scale path is
-    #   ann_lsh_topk (bucket equi-join), which IS swept.
-    #   ann_recall_report — its EXACT reference arm is that same
-    #   declared baseline (recall@k is defined against exact top-k);
-    #   the three approximate arms it grades are equi-join-only and
-    #   remain individually swept via their own queries.
-    #   ann_pq_adc_topk — the declared compressed-domain full scan
-    #   (the PQ point is making the scan 8 adds over 8-byte codes);
-    #   the equi-join scale paths are ann_ivfpq_topk / _rerank_topk,
-    #   which ARE swept.  ann_pq_recall_report grades the PQ arms
-    #   against the exact baseline, so it inherits both exceptions.
-    BNLJ_OK = {"ann_cosine_topk", "ann_recall_report",
-               "ann_recall_report_clustered", "ann_pq_adc_topk",
-               "ann_pq_recall_report"}
+    # No exceptions: the brute-force ANN baseline, the PQ full scan and
+    # the recall reports grading against them score all pairs inside
+    # one Arrow map pass over the corpus, not in a join.
     # Building these queries EXECUTES them (streaming runs to
     # completion, checkpoint writes + crash-injects): the DataFrame
     # they return is a trivial sink/manifest scan, so sweeping them
@@ -131,7 +116,7 @@ def main() -> None:
                   "checkpoint_resume_roundtrip"}
     offenders = []
     for qname, fn in em.queries().items():
-        if qname in BNLJ_OK or qname in EAGER_SKIP:
+        if qname in EAGER_SKIP:
             continue
         try:
             qdf = fn(spark, SF)
@@ -142,9 +127,8 @@ def main() -> None:
         if "BroadcastNestedLoopJoin" in p or "CartesianProduct" in p:
             offenders.append(qname)
     checks.append((f"no BNLJ/Cartesian in any of {len(em.queries())} queries "
-                   f"(except declared baseline {sorted(BNLJ_OK)}; eager "
-                   f"side-effect queries {sorted(EAGER_SKIP)} audited via "
-                   f"their batch twins); offenders={offenders}",
+                   f"(eager side-effect queries {sorted(EAGER_SKIP)} "
+                   f"audited via their batch twins); offenders={offenders}",
                    not offenders))
 
     out = ["# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
