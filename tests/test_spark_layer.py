@@ -57,11 +57,22 @@ def test_no_row_python_in_plan(spark, pts_df):
 
 def test_pip_plan_is_broadcast(spark, pts_df):
     """PIP prefilter must be a broadcast hash join — no shuffle of the
-    point side, no BroadcastNestedLoopJoin (SURVEY.md §5.2 item 3)."""
+    point side, no BroadcastNestedLoopJoin (SURVEY.md §5.2 item 3).  Its
+    refine is codegen: over WGS points the join adds no Python crossing
+    and no Exchange, and the flagship (t3 → PIP) has exactly one."""
     out = pip_op.pip_join(pts_df, spark)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange") == 1
+    t3 = kernels.transform_udf(3)
+    conv = (pts_df.withColumn("o", t3(F.col("fi"), F.col("la"), F.col("h")))
+            .select("k", F.col("o.fi").alias("fi"), F.col("o.la").alias("la"),
+                    F.col("o.h").alias("h")))
+    flagship = pip_op.pip_join(conv, spark)
+    assert flagship._jdf.queryExecution().executedPlan().toString().count(
+        "ArrowEvalPython") == 1
 
 
 def test_pip_vs_numpy_oracle(spark, pts_df):
@@ -87,23 +98,24 @@ def test_pip_vs_numpy_oracle(spark, pts_df):
 
 
 def test_raycast_concave_polygon(spark):
-    """The PRODUCT refine kernel (pip.point_in_polygon_udf) is a
-    general even-odd ray cast: verify it on a concave (arrow-head)
-    polygon where half-plane / convex-only tests would fail.  (The
-    r4 review caught the earlier version of this test asserting on a
-    private re-implementation instead of the kernel — the fixture
-    municipalities are all convex, so the kernel's concave behavior
-    was otherwise untested.)"""
-    poly = np.array([[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [2.0, 1.5],
-                      [0.0, 4.0], [0.0, 0.0], [0.0, 0.0], [0.0, 0.0]]])
+    """The PRODUCT refine (pip.raycast_sql, codegen against the vertex
+    columns carried in the broadcast row) is a general even-odd ray
+    cast: verify it on a concave (arrow-head) polygon where half-plane
+    / convex-only tests would fail.  The fixture municipalities are all
+    convex, so the concave behavior is otherwise untested.  The
+    degenerate repeated vertices give horizontal zero-length edges,
+    whose division the crossing test must skip under ANSI mode."""
+    poly = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [2.0, 1.5],
+                     [0.0, 4.0], [0.0, 0.0], [0.0, 0.0], [0.0, 0.0]])
     # degenerate repeated vertices are fine for even-odd
     px = [2.0, 2.0, 0.5, 2.5]
     py = [0.5, 3.0, 0.5, 2.5]   # (2,3) and (2.5,2.5) in the notch → outside
     df = spark.createDataFrame(
-        [(x, y, 0) for x, y in zip(px, py)], "px double, py double, i int")
-    udf = pip_op.point_in_polygon_udf(poly)
+        [(x, y, *poly.ravel().tolist()) for x, y in zip(px, py)],
+        "px double, py double, "
+        + ", ".join(f"{c} double" for c in pip_op.VERTEX_COLS))
     got = [r.inside for r in
-           df.select(udf(F.col("px"), F.col("py"), F.col("i"))
+           df.select(F.expr(pip_op.raycast_sql("px", "py", pip_op.VERTS))
                      .alias("inside")).collect()]
     assert got == [True, False, True, False]
 

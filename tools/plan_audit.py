@@ -4,12 +4,16 @@ operators to PLANS.md and assert the invariants we design for:
 
 * ArrowEvalPython only — never BatchEvalPython (no per-row Python)
 * PIP prefilter is a BroadcastHashJoin (never BroadcastNestedLoopJoin)
+* PIP refine is codegen: the flagship crosses into Python once (its t3
+  chain), and pip_join over WGS points has no Python crossing and no
+  shuffle Exchange
 * scans show pushed filters / pruned schemas where applicable
 """
 
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -35,6 +39,10 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+def physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def main() -> None:
     spark = build_session("plan-audit", cores=8, shuffle_partitions=8)
     em._register(spark, SF)
@@ -48,12 +56,16 @@ def main() -> None:
                     F.col("o.h").alias("h")))
     flagship = tiles.salted_tile_agg(pip_op.pip_join(conv, spark), key="k")
     plans["flagship: derive → t3 → PIP → salted tile agg"] = formatted(flagship)
+    flagship_arrow = physical(flagship).count("ArrowEvalPython")
 
     tile = (conv.withColumn("cell", kernels.cell_col(F.col("fi"), F.col("la"), 7))
             .groupBy("cell").count())
     plans["tile_t3_cells"] = formatted(tile)
 
     pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
+    pip_wgs_df = pip_op.pip_join(pts, spark)
+    plans["pip_join (WGS points, codegen refine)"] = formatted(pip_wgs_df)
+    pip_wgs = physical(pip_wgs_df)
     plans["knn_join (kernel, zero-shuffle)"] = formatted(
         knn_op.knn_join(pts, spark, key="k", k=3))
 
@@ -76,6 +88,13 @@ def main() -> None:
     checks.append(("PIP prefilter is BroadcastHashJoin",
                    "BroadcastHashJoin" in flag_plan
                    and "BroadcastNestedLoopJoin" not in flag_plan))
+    checks.append((f"flagship plan has exactly one ArrowEvalPython "
+                   f"(found {flagship_arrow})", flagship_arrow == 1))
+    checks.append(("pip_join over WGS points has no ArrowEvalPython and no "
+                   "Exchange (only its BroadcastExchange)",
+                   "ArrowEvalPython" not in pip_wgs
+                   and "BroadcastHashJoin" in pip_wgs
+                   and not re.search(r"(?<!Broadcast)Exchange", pip_wgs)))
     scan_plan = plans["scan pushdown/pruning (lineitem 2-col filter)"]
     checks.append(("filter pushed to parquet scan", "PushedFilters: [IsNotNull(l_shipdate)" in scan_plan
                    or "PushedFilters" in scan_plan))
