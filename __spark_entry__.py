@@ -519,14 +519,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _register(spark, sf_dir)
         from geocoordinateconverter_spark.operators import tiles as tiles_op
         pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return tiles_op.tile_topk_points(pts, key="k", res=5, k=3)
+        return tiles_op.tile_topk_points(pts, key="k")
     q["tile_topk_window"] = q_tile_topk
 
     # ---- kNN join --------------------------------------------------------
     def q_knn(spark, sf_dir):
         _register(spark, sf_dir)
         pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return (knn_op.knn_join(pts, spark, key="k", k=3)
+        return (knn_op.knn_join(pts, spark, key="k")
                 .select("k", "station_id", "dist2", "rk"))
     q["knn_join_stations"] = q_knn
 
@@ -556,7 +556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _register(spark, sf_dir)
         from geocoordinateconverter_spark.operators import tiles as tiles_op
         pts = spark.sql(f"SELECT * FROM {_src_wgs('o_orderkey', 'orders')}")
-        return tiles_op.kring_smooth(pts, res=5)
+        return tiles_op.kring_smooth(pts)
     q["tile_kring_smooth"] = q_kring
 
     # ---- AFT point location (A1/A2) --------------------------------------
@@ -565,7 +565,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         src = spark.sql(
             f"SELECT k, case when x > 1000000.0e0 then x - 5000000.0e0 else x end AS x, y "
             f"FROM {SRC_GK_LINEITEM}")
-        loc = kernels.aft_locate_udf("gk_tm")
+        loc = kernels.aft_locate_udf()
         return src.select("k", loc(F.col("x"), F.col("y")).alias("tri_id"))
     q["aft_locate_triangle"] = q_aft
 
@@ -624,7 +624,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_height_override(spark, sf_dir):
         _register(spark, sf_dir)
         src = spark.sql(f"SELECT * FROM {SRC_GK_LINEITEM} WHERE k % 23 = 0")
-        udf = kernels.transform_with_height_udf(3, height_mode="hg")
+        udf = kernels.transform_udf(3, height_mode="hg")
         df = src.withColumn("o", udf(F.col("x"), F.col("y"), F.col("h")))
         return df.select("k", F.round("o.fi", 8).alias("fi_out"),
                          F.round("o.la", 8).alias("la_out"),
@@ -663,7 +663,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _register(spark, sf_dir)
         return spark.sql(
             f"SELECT k, kind, a1, a2 "
-            f"FROM {wp.classify_pair_sql(PAIR_SRC, 'c1', 'c2')} q")
+            f"FROM {wp.classify_pair_sql(PAIR_SRC)} q")
     q["coord_pair_classify"] = q_classify
 
     # ---- malformed-input policy (gk-slo.c: warn + skip, SURVEY §4.1) -----
@@ -889,7 +889,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_ann(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.brute_force_topk(spark.table("embeddings"), k=5)
+        return sim.brute_force_topk(spark.table("embeddings"))
     q["ann_cosine_topk"] = q_ann
 
     def q_lsh(spark, sf_dir):
@@ -899,12 +899,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_lsh_topk(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.lsh_topk(spark.table("embeddings"), k=5)
+        return sim.lsh_topk(spark.table("embeddings"))
     q["ann_lsh_topk"] = q_lsh_topk
 
     def q_ivf_topk(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.ivf_topk(spark.table("embeddings"), k=5)
+        return sim.ivf_topk(spark.table("embeddings"))
     q["ann_ivf_topk"] = q_ivf_topk
 
     def q_ivf_sizes(spark, sf_dir):
@@ -914,7 +914,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_ivf_nprobe(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.ivf_nprobe_topk(spark.table("embeddings"), k=5, nprobe=3)
+        return sim.ivf_nprobe_topk(spark.table("embeddings"))
     q["ann_ivf_nprobe_topk"] = q_ivf_nprobe
 
     def q_ivf_kmeans(spark, sf_dir):
@@ -925,13 +925,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NumPy-replay pytest).  Scalar output columns
         # (cluster, n_vecs, d, centroid) — driver-canonicalizable.
         _register(spark, sf_dir)
-        return sim.ivf_train_kmeans_exact(spark.table("embeddings"), n_iter=3)
+        return sim.ivf_train_kmeans_exact(spark.table("embeddings"))
     q["ann_ivf_train_kmeans"] = q_ivf_kmeans
 
     def q_pq_train(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.pq_train_codebooks_exact(spark.table("embeddings"),
-                                            n_iter=3)
+        return sim.pq_train_codebooks_exact(spark.table("embeddings"))
     q["ann_pq_train_codebooks"] = q_pq_train
 
     # ---- r5: product quantization (the compressed-corpus ANN path) -------
@@ -945,30 +944,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ann_cosine_topk — the cross product IS the semantics; PQ
         # makes each pair an 8-term table fold over 8-byte codes)
         _register(spark, sf_dir)
-        return sim.pq_adc_topk(spark.table("embeddings"), k=5)
+        return sim.pq_adc_topk(spark.table("embeddings"))
     q["ann_pq_adc_topk"] = q_pq_adc
 
     def q_ivfpq(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.ivfpq_topk(spark.table("embeddings"), k=5, nprobe=3)
+        return sim.ivfpq_topk(spark.table("embeddings"))
     q["ann_ivfpq_topk"] = q_ivfpq
 
     def q_ivfpq_rerank(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.ivfpq_rerank_topk(spark.table("embeddings"), k=5,
-                                     nprobe=3, shortlist=50)
+        return sim.ivfpq_rerank_topk(spark.table("embeddings"))
     q["ann_ivfpq_rerank_topk"] = q_ivfpq_rerank
 
     def q_cnd(spark, sf_dir):
         _register(spark, sf_dir)
-        return sim.cosine_near_dup(spark.table("embeddings"),
-                                   threshold=0.25, id_window=50)
+        return sim.cosine_near_dup(spark.table("embeddings"), threshold=0.25)
     q["embedding_near_dup"] = q_cnd
 
     def q_mm_meta(spark, sf_dir):
         _register(spark, sf_dir)
         docs = mm.html_binary(spark.table("documents"))
-        feats = mm.extract_features(docs, "html", "raw")
+        feats = mm.extract_features(docs)
         return feats.select("doc_id", "n_bytes", "magic")
     q["multimodal_meta"] = q_mm_meta
 
@@ -980,7 +977,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # char-level DuckDB twin sees exactly the utf-8 bytes.
         _register(spark, sf_dir)
         docs = mm.html_binary(spark.table("documents"))
-        feats = mm.extract_features(docs, "html", "raw")
+        feats = mm.extract_features(docs)
         return feats.select("doc_id", "n_bytes", "byte_mean",
                             F.round("byte_entropy", 6).alias("byte_entropy"),
                             "magic")
@@ -1060,8 +1057,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["rollup_orders"] = q_rollup_orders
 
     def q_range(spark, sf_dir):
-        # banded equi form (grid cell + residual filter) — never BNLJ,
-        # survives interval tables too big to broadcast
+        # banded equi form (grid cell + residual filter against the
+        # broadcast exploded intervals) — never BNLJ
         _register(spark, sf_dir)
         from geocoordinateconverter_spark.operators import rangejoin as rj
         e = spark.table("events")
@@ -1175,7 +1172,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"SELECT k, cast(floor(k / 8.0e0) as bigint) AS okey, "
             f"{w['fi']} AS fi, {w['la']} AS la "
             f"FROM (SELECT {LKEY} AS k FROM lineitem) q_k")
-        return tiles_op.salted_tile_agg(pts, key="okey", res=7, n_salt=8)
+        return tiles_op.salted_tile_agg(pts, key="okey")
     q["salted_tile_agg_exact"] = q_salted
 
     def q_zorder(spark, sf_dir):
@@ -1192,7 +1189,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"SELECT k, {w['fi']} AS fi, {w['la']} AS la "
             f"FROM (SELECT {LKEY} AS k FROM lineitem WHERE "
             f"l_orderkey % 5 = 0) q_k")
-        return lo.zorder_keys(pts, key="k", n_files=8)
+        return lo.zorder_keys(pts)
     q["zorder_layout_keys"] = q_zorder
 
     def q_ckpt_gate(spark, sf_dir):
@@ -1264,12 +1261,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recall@5 of each ANN scale path vs the exact brute-force
         # top-5, per method — shared by the uniform- and
         # clustered-fixture diagnostics
-        exact = sim.brute_force_topk(emb, k=5).select("q_id", "vec_id")
+        exact = sim.brute_force_topk(emb).select("q_id", "vec_id")
         nq = exact.select("q_id").distinct().count()  # tiny scalar
         parts = []
-        for m, df in (("lsh", sim.lsh_topk(emb, k=5)),
-                      ("ivf", sim.ivf_topk(emb, k=5)),
-                      ("ivf_nprobe", sim.ivf_nprobe_topk(emb, k=5, nprobe=3))):
+        for m, df in (("lsh", sim.lsh_topk(emb)),
+                      ("ivf", sim.ivf_topk(emb)),
+                      ("ivf_nprobe", sim.ivf_nprobe_topk(emb))):
             hits = (df.select("q_id", "vec_id")
                     .join(exact, ["q_id", "vec_id"])
                     .agg(F.count("*").alias("n_hits"))
@@ -1312,7 +1309,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recovers to within 0.02 of the nprobe cell bound — the
         # monotone story pytest asserts and the oracle pins exactly
         _register(spark, sf_dir)
-        return sim.pq_recall_report(_shared_clustered(spark, sf_dir), k=5)
+        return sim.pq_recall_report(_shared_clustered(spark, sf_dir))
     q["ann_pq_recall_report"] = q_pq_recall
 
     def q_stream_flagship(spark, sf_dir):
@@ -1584,7 +1581,7 @@ WHERE rk <= 3
 
     o["knn_join_stations"] = (
         f"SELECT k, station_id, dist2, rk "
-        f"FROM {knn_op.knn_oracle_sql(_pts_orders, 'k', 3)} q")
+        f"FROM {knn_op.knn_oracle_sql(_pts_orders, 'k')} q")
 
     o["radius_join_stations"] = (
         f"SELECT k, station_id, dist2 "
@@ -1598,7 +1595,7 @@ WHERE rk <= 3
         "SELECT cell, cast(n_own as bigint) AS n_own, "
         "cast(n_smooth as bigint) AS n_smooth, "
         "cast(n_nbrs as bigint) AS n_nbrs FROM ("
-        + tiles_op.kring_smooth_sql(_pts_orders, res=5) + ") q")
+        + tiles_op.kring_smooth_sql(_pts_orders) + ") q")
 
     from geocoordinateconverter_spark.operators import bboxjoin as bj
     o["bbox_intersects_join"] = (
@@ -1710,7 +1707,7 @@ GROUP BY lang
 
     o["coord_pair_classify"] = (
         f"SELECT k, kind, a1, a2 "
-        f"FROM {wp.classify_pair_sql(PAIR_SRC, 'c1', 'c2')} q")
+        f"FROM {wp.classify_pair_sql(PAIR_SRC)} q")
 
     o["shapefile_roundtrip_convert"] = (
         f"SELECT geom_id, vid, round(x, 2) AS x_out, round(y, 2) AS y_out "
@@ -1758,12 +1755,12 @@ GROUP BY lang
         f"FROM (SELECT {LKEY} AS k FROM lineitem WHERE "
         f"l_orderkey % 5 = 0) q_k)")
     o["minhash_rerank_exact"] = td.minhash_rerank_exact_sql()
-    o["ann_cosine_topk"] = sim.brute_force_topk_sql(k=5)
+    o["ann_cosine_topk"] = sim.brute_force_topk_sql()
     o["ann_lsh_buckets"] = sim.lsh_buckets_sql()
-    o["ann_lsh_topk"] = sim.lsh_topk_sql(k=5)
-    o["ann_ivf_topk"] = sim.ivf_topk_sql(k=5)
+    o["ann_lsh_topk"] = sim.lsh_topk_sql()
+    o["ann_ivf_topk"] = sim.ivf_topk_sql()
     o["ann_ivf_cluster_sizes"] = sim.ivf_cluster_sizes_sql()
-    o["embedding_near_dup"] = sim.cosine_near_dup_sql(threshold=0.25, id_window=50)
+    o["embedding_near_dup"] = sim.cosine_near_dup_sql(threshold=0.25)
     o["multimodal_meta"] = (
         "SELECT doc_id, octet_length(html) AS n_bytes, "
         "lower(substr(hex(html), 1, 8)) AS magic FROM ("
@@ -1952,13 +1949,13 @@ WHERE rk <= 10
     o["pivot_events_by_type"] = (
         f"SELECT user_id, {_piv_cols} FROM events GROUP BY user_id")
 
-    _bf5 = sim.brute_force_topk_sql(k=5)
+    _bf5 = sim.brute_force_topk_sql()
     _recall_arms = " UNION ALL ".join(
         f"SELECT '{m}' AS method, count(*) AS n_hits "
         f"FROM ({s}) a JOIN bf ON a.q_id = bf.q_id AND a.vec_id = bf.vec_id"
-        for m, s in (("lsh", sim.lsh_topk_sql(k=5)),
-                     ("ivf", sim.ivf_topk_sql(k=5)),
-                     ("ivf_nprobe", sim.ivf_nprobe_topk_sql(k=5, nprobe=3))))
+        for m, s in (("lsh", sim.lsh_topk_sql()),
+                     ("ivf", sim.ivf_topk_sql()),
+                     ("ivf_nprobe", sim.ivf_nprobe_topk_sql())))
     o["ann_recall_report"] = f"""
 WITH bf AS (SELECT q_id, vec_id FROM ({_bf5}) qb),
 nq AS (SELECT count(DISTINCT q_id) AS n FROM bf)
@@ -1977,20 +1974,19 @@ FROM ({sim.over_clustered_sql(_recall_arms)}) q CROSS JOIN nq
 """
 
     # ---- r3 additions ---------------------------------------------------
-    o["ann_ivf_nprobe_topk"] = sim.ivf_nprobe_topk_sql(k=5, nprobe=3)
-    o["ann_ivf_train_kmeans"] = sim.ivf_train_kmeans_exact_sql(n_iter=3)
-    o["ann_pq_train_codebooks"] = sim.pq_train_codebooks_exact_sql(n_iter=3)
+    o["ann_ivf_nprobe_topk"] = sim.ivf_nprobe_topk_sql()
+    o["ann_ivf_train_kmeans"] = sim.ivf_train_kmeans_exact_sql()
+    o["ann_pq_train_codebooks"] = sim.pq_train_codebooks_exact_sql()
 
     # ---- r5: product quantization ----------------------------------------
     o["ann_pq_codes"] = sim.pq_codes_rows_sql()
-    o["ann_pq_adc_topk"] = sim.pq_adc_topk_sql(k=5)
-    o["ann_ivfpq_topk"] = sim.ivfpq_topk_sql(k=5, nprobe=3)
-    o["ann_ivfpq_rerank_topk"] = sim.ivfpq_rerank_topk_sql(
-        k=5, nprobe=3, shortlist=50)
+    o["ann_pq_adc_topk"] = sim.pq_adc_topk_sql()
+    o["ann_ivfpq_topk"] = sim.ivfpq_topk_sql()
+    o["ann_ivfpq_rerank_topk"] = sim.ivfpq_rerank_topk_sql()
     # clustered-fixture PQ recall: the fixture CTE merges into the
     # report's own WITH head (the report starts "WITH exact AS")
     o["ann_pq_recall_report"] = sim.over_clustered_sql(
-        sim.pq_recall_report_sql(k=5)).replace(
+        sim.pq_recall_report_sql()).replace(
         "WITH exact AS",
         f"WITH emb_clustered AS "
         f"(SELECT * FROM {sim.clustered_embeddings_sql()} qc), exact AS", 1)

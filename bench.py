@@ -107,7 +107,7 @@ def q_geoparse(spark, sf_dir):
 def q_knn(spark, sf_dir):
     from geocoordinateconverter_spark.operators import knn as knn_op
     pts = spark.sql(f"SELECT * FROM {entrymod.SRC_WGS_ORDERS}")
-    return knn_op.knn_join(pts, spark, key="k", k=3)
+    return knn_op.knn_join(pts, spark, key="k")
 
 
 def q_radius(spark, sf_dir):
@@ -126,19 +126,19 @@ def q_minhash(spark, sf_dir):
 
 
 def q_ann(spark, sf_dir):
-    return sim.brute_force_topk(spark.table("embeddings"), k=5)
+    return sim.brute_force_topk(spark.table("embeddings"))
 
 
 def q_ann_ivf(spark, sf_dir):
-    return sim.ivf_topk(spark.table("embeddings"), k=5)
+    return sim.ivf_topk(spark.table("embeddings"))
 
 
 def q_ann_ivf_nprobe(spark, sf_dir):
-    return sim.ivf_nprobe_topk(spark.table("embeddings"), k=5, nprobe=3)
+    return sim.ivf_nprobe_topk(spark.table("embeddings"))
 
 
 def q_ann_ivfpq(spark, sf_dir):
-    return sim.ivfpq_topk(spark.table("embeddings"), k=5, nprobe=3)
+    return sim.ivfpq_topk(spark.table("embeddings"))
 
 
 # bench owns the simhash band-table cache: simhash_near_dup_pairs only

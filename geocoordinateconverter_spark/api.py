@@ -73,7 +73,8 @@ def convert(df: DataFrame, t: int, height_mode: str | None = None,
     in_names = (("fi", "la", "h") if t in IN_GEOGRAPHIC else ("x", "y", "h"))
     c1n, c2n, c3n = cols or in_names
     c1, c2 = (F.col(c2n), F.col(c1n)) if reverse else (F.col(c1n), F.col(c2n))
-    udf = kernels.transform_with_height_udf(t, height_mode, geoid_model)
+    udf = kernels.transform_udf(
+        t, height_mode or kernels.HEIGHT_MODE_DEFAULTS[t], geoid_model)
     out_names = (("fi", "la", "h") if t in OUT_GEOGRAPHIC else ("x", "y", "h"))
     res = df.withColumn("_o", udf(c1, c2, F.col(c3n)))
     keep = [F.col(c) for c in df.columns] + [

@@ -76,15 +76,15 @@ def parent(cell: np.ndarray) -> np.ndarray:
     return ((res - 1) << RES_SHIFT) + ((ix >> 1) << IX_SHIFT) + (iy >> 1)
 
 
-def k_ring(cell: int, k: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance k (clipped to the grid) —
-    the H3 k-ring analogue used for kNN candidate expansion."""
+def k_ring(cell: int) -> np.ndarray:
+    """All cells within Chebyshev distance 1 (clipped to the grid) —
+    the H3 k-ring(1) analogue."""
     res, ix, iy = decode(np.asarray([cell], np.int64))
     res, ix, iy = int(res[0]), int(ix[0]), int(iy[0])
     n = n_cells(res)
     out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
+    for dx in (-1, 0, 1):
+        for dy in (-1, 0, 1):
             jx, jy = ix + dx, iy + dy
             if 0 <= jx < n and 0 <= jy < n:
                 out.append((res << RES_SHIFT) + (jx << IX_SHIFT) + jy)

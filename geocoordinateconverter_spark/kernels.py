@@ -50,38 +50,21 @@ _GEOGRAPHIC_IN = {2, 4, 8}
 # values mirror the public usage docs and each chain's semantics:
 # same-datum projections carry the geoid-corrected height, Helmert
 # chains the transformed height, AFT chains copy.]  The table is the
-# single source of truth for transform_with_height_udf.
+# single source of truth for api.convert's per-chain default.
 HEIGHT_MODE_DEFAULTS = {1: "hg", 2: "hg", 3: "ht", 4: "ht", 5: "ht",
                         6: "ht", 7: "hc", 8: "hc", 9: "hc", 10: "hc"}
 
 
-def transform_udf(t: int):
+def transform_udf(t: int, height_mode: str = "ht", geoid_model: str = "slo"):
     """pandas UDF for composite chain ``t`` (1..10, SURVEY.md §3.3).
 
     Signature: (c1, c2, c3) → struct<c1:double, c2:double, c3:double>
     where the c-triple is (x, y, H) or (fi, la, h) per the chain's
     GEOUTM/GEOGRA direction.  The whole chain is one NumPy pipeline →
     one Arrow crossing.
-    """
-    fn = _CHAINS[t]
-    names = ("fi", "la", "h") if t in _GEOGRAPHIC_OUT else ("x", "y", "h")
-    schema = ", ".join(f"{n} double" for n in names)
 
-    @pandas_udf(schema)
-    def _udf(c1: pd.Series, c2: pd.Series, c3: pd.Series) -> pd.DataFrame:
-        o1, o2, o3 = fn(c1.to_numpy(dtype="float64", copy=False),
-                        c2.to_numpy(dtype="float64", copy=False),
-                        c3.to_numpy(dtype="float64", copy=False))
-        return pd.DataFrame({names[0]: o1, names[1]: o2, names[2]: o3})
-
-    _udf.__name__ = f"t{t}_{fn.__name__}"
-    return _udf
-
-
-def transform_with_height_udf(t: int, height_mode: str | None = None,
-                              geoid_model: str = "slo"):
-    """Chain ``t`` with an explicit -ht/-hc/-hg height-mode selector
-    (gk-slo CLI options; defaults from :data:`HEIGHT_MODE_DEFAULTS`).
+    ``height_mode`` is the gk-slo -ht/-hc/-hg selector (api.convert
+    picks the per-chain default from :data:`HEIGHT_MODE_DEFAULTS`):
 
     * ``ht`` — the chain's transformed height (Helmert path carries it
       through ECEF; projection-only chains pass it unchanged).
@@ -94,11 +77,11 @@ def transform_with_height_udf(t: int, height_mode: str | None = None,
       them raises (their reference defaults are ht/hc anyway).
 
     Still ONE Arrow crossing: the geoid lookup is NumPy inside the
-    same UDF."""
-    mode = height_mode or HEIGHT_MODE_DEFAULTS[t]
-    if mode not in ("ht", "hc", "hg"):
-        raise ValueError(f"height_mode {mode!r}")
-    if mode == "hg" and t not in (_GEOGRAPHIC_OUT | _GEOGRAPHIC_IN):
+    same UDF.  The UDF is named ``t{t}_{chain}``, suffixed with the
+    mode unless it is ``ht``."""
+    if height_mode not in ("ht", "hc", "hg"):
+        raise ValueError(f"height_mode {height_mode!r}")
+    if height_mode == "hg" and t not in (_GEOGRAPHIC_OUT | _GEOGRAPHIC_IN):
         raise ValueError(
             f"height_mode='hg' needs a geographic endpoint; chain t={t} "
             f"is projected↔projected (default: {HEIGHT_MODE_DEFAULTS[t]!r})")
@@ -112,9 +95,9 @@ def transform_with_height_udf(t: int, height_mode: str | None = None,
         a2 = c2.to_numpy(dtype="float64", copy=False)
         a3 = c3.to_numpy(dtype="float64", copy=False)
         o1, o2, o3 = fn(a1, a2, a3)
-        if mode == "hc":
+        if height_mode == "hc":
             h = a3
-        elif mode == "ht":
+        elif height_mode == "ht":
             h = o3
         elif t in _GEOGRAPHIC_OUT:
             h = o3 + _geoid.geoid_height(o1, o2, geoid_model)
@@ -122,7 +105,8 @@ def transform_with_height_udf(t: int, height_mode: str | None = None,
             h = o3 - _geoid.geoid_height(a1, a2, geoid_model)
         return pd.DataFrame({names[0]: o1, names[1]: o2, names[2]: h})
 
-    _udf.__name__ = f"t{t}_{fn.__name__}_{mode}"
+    suffix = "" if height_mode == "ht" else f"_{height_mode}"
+    _udf.__name__ = f"t{t}_{fn.__name__}{suffix}"
     return _udf
 
 
@@ -138,10 +122,10 @@ def geoid_udf(model: str = "slo"):
     return _udf
 
 
-def aft_locate_udf(direction: str = "gk_tm"):
-    """Containing-triangle id (first match in table order; −1 outside)
-    — the point-location half of SURVEY.md §3.4 A1/A2."""
-    table = _aft.AFT_GK_TM if direction == "gk_tm" else _aft.AFT_TM_GK
+def aft_locate_udf():
+    """Containing GK→TM triangle id (first match in table order; −1
+    outside) — the point-location half of SURVEY.md §3.4 A1/A2."""
+    table = _aft.AFT_GK_TM
 
     @pandas_udf("long")
     def _udf(x: pd.Series, y: pd.Series) -> pd.Series:

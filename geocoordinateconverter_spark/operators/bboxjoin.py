@@ -69,22 +69,21 @@ def parcels_df(spark: SparkSession) -> DataFrame:
         f"SELECT * FROM {parcels_sql('c_custkey', 'customer')} q_parcels")
 
 
-def mun_bbox_rows(n_mun: int = 20):
+def mun_bbox_rows():
     """[(mun_id, mxmin, mymin, mxmax, mymax)] from the exact PIP
     octagon vertices (plain min/max over 8 float64s — the same values
     the oracle's least/greatest sees)."""
-    polys = pip_op.municipality_polygons(n_mun)
+    polys = pip_op.municipality_polygons()
     return [(i,
              float(polys[i, :, 0].min()), float(polys[i, :, 1].min()),
              float(polys[i, :, 0].max()), float(polys[i, :, 1].max()))
-            for i in range(n_mun)]
+            for i in range(pip_op.N_MUN)]
 
 
-def bbox_intersects_join(parcels: DataFrame, spark: SparkSession,
-                         n_mun: int = 20) -> DataFrame:
+def bbox_intersects_join(parcels: DataFrame, spark: SparkSession) -> DataFrame:
     """(k, mun_id, ox, oy): every (parcel, municipality) pair whose
     bboxes strictly overlap, with exact overlap extents."""
-    rows = mun_bbox_rows(n_mun)
+    rows = mun_bbox_rows()
     mun = spark.createDataFrame(
         rows, "mun_id int, mxmin double, mymin double, "
               "mxmax double, mymax double")
@@ -120,7 +119,7 @@ def bbox_intersects_join(parcels: DataFrame, spark: SparkSession,
             .select("k", "mun_id", "ox", "oy"))
 
 
-def bbox_intersects_oracle_sql(parcels_src: str, n_mun: int = 20) -> str:
+def bbox_intersects_oracle_sql(parcels_src: str) -> str:
     """Brute-force oracle: municipality bboxes by 8-way least/greatest
     over the exact vertex VALUES, cross join + the identical strict
     predicate and extents."""
@@ -128,7 +127,7 @@ def bbox_intersects_oracle_sql(parcels_src: str, n_mun: int = 20) -> str:
     vy = ", ".join(f"v{v}y" for v in range(pip_op.N_VERTS))
     munb = (f"(SELECT mun_id, least({vx}) AS mxmin, least({vy}) AS mymin, "
             f"greatest({vx}) AS mxmax, greatest({vy}) AS mymax "
-            f"FROM {pip_op.municipalities_values_sql(n_mun)})")
+            f"FROM {pip_op.municipalities_values_sql()})")
     return f"""
 (SELECT k, mun_id, ox, oy FROM (
    SELECT p.k, m.mun_id,

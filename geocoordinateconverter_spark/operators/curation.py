@@ -57,26 +57,24 @@ def _sample_bucket_col():
         % SAMPLE_MOD
 
 
-def stratified_sample(docs: DataFrame,
-                      rates: dict[str, int] | None = None) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """Keep doc when ``hash60('smp:'||doc_id) % 1e6 < rate[lang]``.
 
     Returns the kept rows ``(doc_id, lang, smp_bucket)`` — row-level so
     the oracle value-hash pins every individual keep decision, not just
     the counts.
     """
-    rates = SAMPLE_RATES if rates is None else rates
     rate = F.lit(SAMPLE_MOD)
-    for lang, r in rates.items():
+    for lang, r in SAMPLE_RATES.items():
         rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return (docs
             .select("doc_id", "lang", _sample_bucket_col().alias("smp_bucket"))
             .filter(F.col("smp_bucket") < rate))
 
 
-def stratified_sample_sql(rates: dict[str, int] | None = None) -> str:
-    rates = SAMPLE_RATES if rates is None else rates
-    whens = " ".join(f"WHEN lang = '{k}' THEN {v}" for k, v in rates.items())
+def stratified_sample_sql() -> str:
+    whens = " ".join(f"WHEN lang = '{k}' THEN {v}"
+                     for k, v in SAMPLE_RATES.items())
     bucket = hash60_sql("concat('smp:', cast(doc_id as varchar))")
     return f"""
 SELECT doc_id, lang, smp_bucket FROM (
@@ -133,11 +131,10 @@ def pack_sequences(docs: DataFrame, budget: int = PACK_BUDGET,
         (hi - lo).alias("piece_len"))
 
 
-def pack_sequences_sql(budget: int = PACK_BUDGET,
-                       n_shards: int = PACK_SHARDS) -> str:
+def pack_sequences_sql() -> str:
     return f"""
 WITH sized AS (
-  SELECT doc_id, doc_id % {n_shards} AS shard,
+  SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
          len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tok
   FROM documents),
 placed AS (
@@ -152,14 +149,14 @@ placed AS (
 pieces AS (
   SELECT shard, doc_id, n_tok, doc_offset,
          -- integer division (//), matching Spark's DIV: exact int64
-         unnest(generate_series(doc_offset // {budget},
-                                (doc_offset + n_tok - 1) // {budget}))
+         unnest(generate_series(doc_offset // {PACK_BUDGET},
+                                (doc_offset + n_tok - 1) // {PACK_BUDGET}))
            AS seq_id
   FROM placed)
 SELECT shard, seq_id, doc_id,
-       greatest(doc_offset, seq_id * {budget}) - doc_offset AS piece_start,
-       least(doc_offset + n_tok, (seq_id + 1) * {budget})
-         - greatest(doc_offset, seq_id * {budget}) AS piece_len
+       greatest(doc_offset, seq_id * {PACK_BUDGET}) - doc_offset AS piece_start,
+       least(doc_offset + n_tok, (seq_id + 1) * {PACK_BUDGET})
+         - greatest(doc_offset, seq_id * {PACK_BUDGET}) AS piece_len
 FROM pieces
 """
 
@@ -239,6 +236,8 @@ FROM (
 # aggregation and the dup-gram equi-join.
 
 SPAN_N = 5
+# a gram is duplicated when at least this many documents contain it;
+# dup_ngram_spans tests the 2 as min(doc_id) <> max(doc_id)
 SPAN_MIN_DOCS = 2
 
 
@@ -252,11 +251,10 @@ def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
                     .alias("pos", "gram")))
 
 
-def dup_ngram_spans(docs: DataFrame, n: int = SPAN_N,
-                    min_docs: int = SPAN_MIN_DOCS,
-                    cache: list | None = None) -> DataFrame:
+def dup_ngram_spans(docs: DataFrame, cache: list | None = None) -> DataFrame:
     """(doc_id, span_start, span_end, n_hits): maximal merged token
-    spans covered by n-grams shared across >= min_docs documents.
+    spans covered by SPAN_N-grams shared across >= SPAN_MIN_DOCS
+    documents.
     span bounds are inclusive 0-based filtered-token indices; n_hits
     counts the duplicated gram starts inside the span.
 
@@ -267,48 +265,43 @@ def dup_ngram_spans(docs: DataFrame, n: int = SPAN_N,
     supplies a list, the gram frame is persisted and appended for the
     caller to unpersist; when None (the swept path), the plan stays
     pure-lazy to avoid unowned storage."""
-    g = _pos_grams(docs, n)
+    g = _pos_grams(docs, SPAN_N)
     if cache is not None:
         g = g.persist()
         cache.append(g)
-    if min_docs == 2:
-        # r6: "appears in >= 2 distinct docs" == min(doc_id) <> max
-        # (doc_id) — single-phase min/max partials replace the two-
-        # Exchange distinct-expansion of countDistinct (plan: 2
-        # Exchanges -> 1 on the gram-frequency side), same dup set
-        dup = (g.groupBy("gram")
-               .agg(F.min("doc_id").alias("d_lo"),
-                    F.max("doc_id").alias("d_hi"))
-               .filter(F.col("d_lo") != F.col("d_hi"))
-               .select("gram"))
-    else:
-        dup = (g.groupBy("gram")
-               .agg(F.countDistinct("doc_id").alias("nd"))
-               .filter(F.col("nd") >= min_docs)
-               .select("gram"))
+    # r6: "appears in >= 2 distinct docs" == min(doc_id) <> max(doc_id)
+    # — single-phase min/max partials replace the two-Exchange
+    # distinct-expansion of countDistinct (plan: 2 Exchanges -> 1 on
+    # the gram-frequency side), same dup set
+    dup = (g.groupBy("gram")
+           .agg(F.min("doc_id").alias("d_lo"),
+                F.max("doc_id").alias("d_hi"))
+           .filter(F.col("d_lo") != F.col("d_hi"))
+           .select("gram"))
     hits = g.join(dup, "gram").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     # new island when this gram start is beyond the previous gram's
-    # covered range [prev, prev + n - 1] — i.e. gap iff pos > prev + n
-    # is false for overlap/adjacency: merge while pos <= prev + n
+    # covered range [prev, prev + SPAN_N - 1] — i.e. gap iff
+    # pos > prev + SPAN_N is false for overlap/adjacency: merge while
+    # pos <= prev + SPAN_N
     flagged = hits.withColumn(
         "new_island",
         F.when(F.lag("pos").over(w).isNull()
-               | (F.col("pos") > F.lag("pos").over(w) + n), 1).otherwise(0))
+               | (F.col("pos") > F.lag("pos").over(w) + SPAN_N), 1)
+        .otherwise(0))
     islands = flagged.withColumn(
         "island", F.sum("new_island").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     return (islands.groupBy("doc_id", "island")
             .agg(F.min("pos").alias("span_start"),
-                 (F.max("pos") + (n - 1)).alias("span_end"),
+                 (F.max("pos") + (SPAN_N - 1)).alias("span_end"),
                  F.count("*").alias("n_hits"))
             .select("doc_id", "span_start", "span_end", "n_hits"))
 
 
-def dup_ngram_spans_sql(n: int = SPAN_N,
-                        min_docs: int = SPAN_MIN_DOCS) -> str:
+def dup_ngram_spans_sql() -> str:
     leads = " || ' ' || ".join(
-        ["tok"] + [f"lead(tok, {j}) OVER w" for j in range(1, n)])
+        ["tok"] + [f"lead(tok, {j}) OVER w" for j in range(1, SPAN_N)])
     return f"""
 WITH pos_words AS (
   SELECT doc_id,
@@ -325,16 +318,16 @@ grams AS (
            count(*) OVER (PARTITION BY doc_id) AS n_tok
     FROM pos_words
     WINDOW w AS (PARTITION BY doc_id ORDER BY pos)) q
-  WHERE pos <= n_tok - {n}),
+  WHERE pos <= n_tok - {SPAN_N}),
 dup AS (
   SELECT gram FROM grams GROUP BY gram
-  HAVING count(DISTINCT doc_id) >= {min_docs}),
+  HAVING count(DISTINCT doc_id) >= {SPAN_MIN_DOCS}),
 hits AS (
   SELECT g.doc_id, g.pos FROM grams g JOIN dup d ON g.gram = d.gram),
 flagged AS (
   SELECT doc_id, pos,
          CASE WHEN lag(pos) OVER w IS NULL
-                OR pos > lag(pos) OVER w + {n} THEN 1 ELSE 0 END
+                OR pos > lag(pos) OVER w + {SPAN_N} THEN 1 ELSE 0 END
            AS new_island
   FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
 islands AS (
@@ -343,7 +336,7 @@ islands AS (
                                ROWS BETWEEN UNBOUNDED PRECEDING
                                AND CURRENT ROW) AS island
   FROM flagged)
-SELECT doc_id, min(pos) AS span_start, max(pos) + {n - 1} AS span_end,
+SELECT doc_id, min(pos) AS span_start, max(pos) + {SPAN_N - 1} AS span_end,
        count(*) AS n_hits
 FROM islands GROUP BY doc_id, island
 """
@@ -388,7 +381,7 @@ def _bench_sel_col():
         % BENCH_MOD
 
 
-def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """(doc_id, n_gram_hits, n_bench_docs): corpus docs sharing at
     least one word n-gram with the synthetic benchmark, with how many
     distinct benchmark grams and benchmark examples they hit.  Grams
@@ -414,8 +407,8 @@ def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     bm: dict = {}
     for bid, tl in zip(bpdf["bench_id"], bpdf["toks"]):
         tl = list(tl)
-        for i in range(len(tl) - n + 1):
-            bm.setdefault(" ".join(tl[i:i + n]), set()).add(int(bid))
+        for i in range(len(tl) - DECON_N + 1):
+            bm.setdefault(" ".join(tl[i:i + DECON_N]), set()).add(int(bid))
     bq = spark.sparkContext.broadcast(bm)
 
     def kern(batches):
@@ -426,10 +419,10 @@ def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
             toks = b.column("toks").to_pylist()
             o_id, o_g, o_b = [], [], []
             for did, tl in zip(ids, toks):
-                if tl is None or len(tl) < n:
+                if tl is None or len(tl) < DECON_N:
                     continue
-                grams = {" ".join(tl[i:i + n])
-                         for i in range(len(tl) - n + 1)}
+                grams = {" ".join(tl[i:i + DECON_N])
+                         for i in range(len(tl) - DECON_N + 1)}
                 bids: set = set()
                 nhit = 0
                 for g in grams:
@@ -453,7 +446,7 @@ def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
         kern, "doc_id long, n_gram_hits long, n_bench_docs long")
 
 
-def decontaminate_sql(n: int = DECON_N) -> str:
+def decontaminate_sql() -> str:
     sel = hash60_sql("concat('bm:', cast(doc_id as varchar))")
     return f"""
 WITH toks AS (
@@ -465,10 +458,10 @@ bench AS (
   FROM toks WHERE {sel} % {BENCH_MOD} < {BENCH_RATE}),
 bench_grams AS (
   SELECT DISTINCT bench_id, gram FROM (
-    SELECT bench_id, unnest({_grams_duck(n)}) AS gram FROM bench) q),
+    SELECT bench_id, unnest({_grams_duck(DECON_N)}) AS gram FROM bench) q),
 doc_grams AS (
   SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, unnest({_grams_duck(n)}) AS gram FROM toks) q)
+    SELECT doc_id, unnest({_grams_duck(DECON_N)}) AS gram FROM toks) q)
 SELECT d.doc_id,
        count(DISTINCT d.gram) AS n_gram_hits,
        count(DISTINCT b.bench_id) AS n_bench_docs
@@ -499,13 +492,11 @@ MIX_EPOCHS_PPM: dict[str, int] = {
 MIX_DEFAULT_PPM = 1_000_000
 
 
-def mixture_resample(docs: DataFrame,
-                     ppm: dict[str, int] | None = None) -> DataFrame:
+def mixture_resample(docs: DataFrame) -> DataFrame:
     """(doc_id, source, copy_idx): each doc repeated to its domain's
     epoch count; copy_idx is 1-based."""
-    ppm = MIX_EPOCHS_PPM if ppm is None else ppm
     epochs = F.lit(MIX_DEFAULT_PPM)
-    for s, v in ppm.items():
+    for s, v in MIX_EPOCHS_PPM.items():
         epochs = F.when(F.col("source") == s, F.lit(v)).otherwise(epochs)
     bucket = hash60_col(
         F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))) % MIX_MOD
@@ -525,9 +516,9 @@ def mixture_resample(docs: DataFrame,
             .withColumn("copy_idx", F.col("copy_idx").cast("long")))
 
 
-def mixture_resample_sql(ppm: dict[str, int] | None = None) -> str:
-    ppm = MIX_EPOCHS_PPM if ppm is None else ppm
-    whens = " ".join(f"WHEN source = '{k}' THEN {v}" for k, v in ppm.items())
+def mixture_resample_sql() -> str:
+    whens = " ".join(f"WHEN source = '{k}' THEN {v}"
+                     for k, v in MIX_EPOCHS_PPM.items())
     bucket = hash60_sql("concat('mix:', cast(doc_id as varchar))")
     return f"""
 WITH sized AS (
@@ -562,7 +553,7 @@ FROM copies WHERE n_copies >= 1
 # PARTITIONED BY score — every bucket ranks in parallel, no global
 # sort ever happens.  Ranking is total (score desc, doc_id asc), so
 # the kept set is unique and reproducible.  All arithmetic is exact
-# int64 (budget = pct% of corpus tokens, integer division).
+# int64 (budget = BUDGET_PCT% of corpus tokens, integer division).
 
 BUDGET_PCT = 30
 # doc_id range width of one score sub-bucket (see the de-skew note in
@@ -573,9 +564,9 @@ BUDGET_SUB_WIDTH = 1 << 16
 _SUM_LEN = "aggregate(toks, 0L, (a, t) -> a + length(t))"
 
 
-def token_budget_select(docs: DataFrame, pct: int = BUDGET_PCT) -> DataFrame:
+def token_budget_select(docs: DataFrame) -> DataFrame:
     """(doc_id, score, n_tok, cum_tok): the docs kept by ranking on
-    (score desc, doc_id asc) until pct% of corpus tokens; cum_tok is
+    (score desc, doc_id asc) until BUDGET_PCT% of corpus tokens; cum_tok is
     the running kept-token count through each doc in rank order."""
     d = (docs.select("doc_id", F.expr(TOKS_EXPR).alias("toks"))
          .select("doc_id",
@@ -593,13 +584,13 @@ def token_budget_select(docs: DataFrame, pct: int = BUDGET_PCT) -> DataFrame:
     w_off = (Window.partitionBy(F.lit(0)).orderBy(F.desc("score"))
              .rowsBetween(Window.unboundedPreceding, -1))
     w_all = Window.partitionBy(F.lit(0))
-    # the budget (pct% of corpus tokens) rides the bucket table as a
+    # the budget (BUDGET_PCT% of corpus tokens) rides the bucket table as a
     # full-window sum — no scalar crossJoin, so the corpus side sees
     # exactly one BroadcastHashJoin on score and zero BNLJ
     offs = (buckets.select(
         "score",
         F.coalesce(F.sum("bkt_tok").over(w_off), F.lit(0)).alias("bkt_off"),
-        (F.sum("bkt_tok").over(w_all) * pct).alias("budget_x100"))
+        (F.sum("bkt_tok").over(w_all) * BUDGET_PCT).alias("budget_x100"))
         .withColumn("budget", F.expr("budget_x100 DIV 100"))
         .drop("budget_x100"))
     # r6 de-skew (VERDICT r5 "what's wrong" #3): score has BOUNDED
@@ -632,7 +623,7 @@ def token_budget_select(docs: DataFrame, pct: int = BUDGET_PCT) -> DataFrame:
             .select("doc_id", "score", "n_tok", "cum_tok"))
 
 
-def token_budget_select_sql(pct: int = BUDGET_PCT) -> str:
+def token_budget_select_sql() -> str:
     return f"""
 WITH sized AS (
   SELECT doc_id,
@@ -652,7 +643,7 @@ offs AS (
            ORDER BY score DESC
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as bigint)
            AS bkt_off,
-         (cast(sum(bkt_tok) OVER () as bigint) * {pct}) // 100 AS budget
+         (cast(sum(bkt_tok) OVER () as bigint) * {BUDGET_PCT}) // 100 AS budget
   FROM buckets),
 ranked AS (
   SELECT s.doc_id, s.score, s.n_tok,
@@ -737,7 +728,7 @@ def line_dedup(docs: DataFrame, min_docs: int = LINE_MIN_DOCS,
                       F.length("clean").cast("long").alias("clean_len"))
 
 
-def line_dedup_sql(min_docs: int = LINE_MIN_DOCS) -> str:
+def line_dedup_sql() -> str:
     chunk = (f"list_transform(generate_series(0, (len(toks) - 1) // "
              f"{LINE_TOKS}), i -> array_to_string(list_slice(toks, "
              f"i * {LINE_TOKS} + 1, i * {LINE_TOKS} + {LINE_TOKS}), ' '))")
@@ -758,7 +749,7 @@ lines AS (
   FROM paged),
 dup AS (
   SELECT md5(line) AS line_md5 FROM lines
-  GROUP BY 1 HAVING count(DISTINCT doc_id) >= {min_docs}),
+  GROUP BY 1 HAVING count(DISTINCT doc_id) >= {LINE_MIN_DOCS}),
 flagged AS (
   SELECT doc_id, pos, line,
          CASE WHEN md5(line) IN (SELECT line_md5 FROM dup)

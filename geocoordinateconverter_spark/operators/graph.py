@@ -52,9 +52,8 @@ def host_edges(orders: DataFrame) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def pagerank_hosts(orders: DataFrame, spark: SparkSession,
-                   n_iter: int = N_ITER) -> DataFrame:
-    """(node, pr, outdeg) after ``n_iter`` fixed-point iterations.
+def pagerank_hosts(orders: DataFrame, spark: SparkSession) -> DataFrame:
+    """(node, pr, outdeg) after ``N_ITER`` fixed-point iterations.
     pr is the int64 rank ×10¹²; outdeg 0 marks dangling nodes.  The
     per-iteration rank table (N_HOSTS rows) is broadcast to the
     src-partitioned edge table."""
@@ -65,7 +64,7 @@ def pagerank_hosts(orders: DataFrame, spark: SparkSession,
     pr = nodes.withColumn("pr", F.lit(SCALE // N_HOSTS))
     # edge side: one partitioning by src, reused every round
     esrc = edges.join(outdeg, "src").repartition("src")
-    for _ in range(n_iter):
+    for _ in range(N_ITER):
         contrib = (esrc.join(F.broadcast(pr),
                              esrc["src"] == pr["node"])
                    .select("dst", F.expr("pr div outdeg").alias("c"))
@@ -80,7 +79,7 @@ def pagerank_hosts(orders: DataFrame, spark: SparkSession,
                     F.coalesce("outdeg", F.lit(0)).alias("outdeg")))
 
 
-def pagerank_hosts_sql(n_iter: int = N_ITER) -> str:
+def pagerank_hosts_sql() -> str:
     base = (15 * SCALE) // (100 * N_HOSTS)
     ctes = [f"""
 edges AS (
@@ -93,7 +92,7 @@ outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
 nodes AS (SELECT cast(range as bigint) AS node FROM range({N_HOSTS})),
 pr0 AS (SELECT node, cast({SCALE // N_HOSTS} as bigint) AS pr
         FROM nodes)"""]
-    for i in range(1, n_iter + 1):
+    for i in range(1, N_ITER + 1):
         ctes.append(f"""
 pr{i} AS (
   SELECT n.node,
@@ -109,5 +108,5 @@ pr{i} AS (
     return f"""
 WITH {joined}
 SELECT p.node, p.pr, cast(coalesce(d.outdeg, 0) as bigint) AS outdeg
-FROM pr{n_iter} p LEFT JOIN outdeg d ON d.src = p.node
+FROM pr{N_ITER} p LEFT JOIN outdeg d ON d.src = p.node
 """

@@ -3,7 +3,7 @@
 Semantics: k nearest stations per point, deterministic ties by
 ``station_id`` asc (FIXTURES.md §5).  The plan is ZERO-SHUFFLE: the
 station table is tiny, so it lives in the pandas-UDF closure; the
-kernel computes the full (batch × n_st) distance matrix in NumPy,
+kernel computes the full (batch × N_STATIONS) distance matrix in NumPy,
 stable-argsorts, and emits the top-k as a flat struct which codegen
 explodes into rows.  Scan → ArrowEvalPython → Generate — no Exchange
 at all (the broadcast+window form shuffled the 25×-inflated candidate
@@ -35,27 +35,30 @@ from ..functions.sqlgen import f as _f
 
 LA_FACTOR = 0.7
 KNN_CELL_RES = 3  # coarse cells for radius_join's station rings
+N_STATIONS = 25
+KNN_K = 3         # nearest stations per point
 
 
-def station_positions(n_st: int = 25) -> np.ndarray:
-    out = np.empty((n_st, 2), dtype=np.float64)  # (fi, la)
-    for i in range(n_st):
+def station_positions() -> np.ndarray:
+    out = np.empty((N_STATIONS, 2), dtype=np.float64)  # (fi, la)
+    for i in range(N_STATIONS):
         out[i, 0] = BBOX_FI_MIN + 0.1 + (BBOX_FI_MAX - BBOX_FI_MIN - 0.2) * (((i + 1) * 2654435761) % 1000000) / 1000000.0
         out[i, 1] = BBOX_LA_MIN + 0.1 + (BBOX_LA_MAX - BBOX_LA_MIN - 0.2) * (((i + 1) * 1597334677) % 1000000) / 1000000.0
     return out
 
 
-def stations_values_sql(n_st: int = 25) -> str:
-    pos = station_positions(n_st)
-    rows = ", ".join(f"({i}, {_f(pos[i, 0])}, {_f(pos[i, 1])})" for i in range(n_st))
+def stations_values_sql() -> str:
+    pos = station_positions()
+    rows = ", ".join(f"({i}, {_f(pos[i, 0])}, {_f(pos[i, 1])})"
+                     for i in range(N_STATIONS))
     return f"(SELECT * FROM (VALUES {rows}) AS s(station_id, s_fi, s_la))"
 
 
-def stations_df(spark: SparkSession, n_st: int = 25) -> DataFrame:
-    pos = station_positions(n_st)
+def stations_df(spark: SparkSession) -> DataFrame:
+    pos = station_positions()
     rows = [(i, float(pos[i, 0]), float(pos[i, 1]),
              int(cells.encode(pos[i, 0:1], pos[i, 1:2], KNN_CELL_RES)[0]))
-            for i in range(n_st)]
+            for i in range(N_STATIONS)]
     return spark.createDataFrame(
         rows, "station_id int, s_fi double, s_la double, s_cell bigint")
 
@@ -87,20 +90,20 @@ def _station_rings(spark: SparkSession, pos: np.ndarray,
     return spark.createDataFrame(ring_rows, "cell bigint, station_id int")
 
 
-def _dist2(fi, la):
-    return ((F.col(fi) - F.col("s_fi")) * (F.col(fi) - F.col("s_fi"))
-            + (F.lit(LA_FACTOR) * (F.col(la) - F.col("s_la")))
-            * (F.lit(LA_FACTOR) * (F.col(la) - F.col("s_la"))))
+def _dist2():
+    return ((F.col("fi") - F.col("s_fi")) * (F.col("fi") - F.col("s_fi"))
+            + (F.lit(LA_FACTOR) * (F.col("la") - F.col("s_la")))
+            * (F.lit(LA_FACTOR) * (F.col("la") - F.col("s_la"))))
 
 
-def knn_kernel_udf(n_st: int, k: int):
+def knn_kernel_udf(k: int):
     """Vectorized top-k kernel: stations in closure, full distance
     matrix per Arrow batch, stable argsort (ties resolve to the lowest
     station_id because columns are in id order).  The arithmetic is the
     exact IEEE op sequence of :func:`_dist2` / the SQL oracle —
     subtract, multiply, multiply-add in the same order — so dist2 is
     bit-identical to the window oracle."""
-    pos = station_positions(n_st)
+    pos = station_positions()
     sfi = pos[:, 0].copy()
     sla = pos[:, 1].copy()
     fields = ", ".join(f"s{j}:int, d{j}:double" for j in range(k))
@@ -124,16 +127,15 @@ def knn_kernel_udf(n_st: int, k: int):
 
 
 def knn_join(points: DataFrame, spark: SparkSession, key: str,
-             fi_col: str = "fi", la_col: str = "la", k: int = 3,
-             n_st: int = 25) -> DataFrame:
-    # at most n_st rows per point
-    k = min(k, n_st)
+             k: int = KNN_K) -> DataFrame:
+    # at most N_STATIONS rows per point
+    k = min(k, N_STATIONS)
     # NULL fi/la: kNN of an unknown coordinate is undefined — such rows
     # are EXCLUDED from the output, not emitted with a NaN dist2.
-    points = points.filter(F.col(fi_col).isNotNull()
-                           & F.col(la_col).isNotNull())
-    udf = knn_kernel_udf(n_st, k)
-    nn = points.withColumn("_nn", udf(F.col(fi_col), F.col(la_col)))
+    points = points.filter(F.col("fi").isNotNull()
+                           & F.col("la").isNotNull())
+    udf = knn_kernel_udf(k)
+    nn = points.withColumn("_nn", udf(F.col("fi"), F.col("la")))
     structs = F.array(*[
         F.struct(F.col(f"_nn.s{j}").alias("station_id"),
                  F.col(f"_nn.d{j}").alias("dist2"),
@@ -146,22 +148,21 @@ def knn_join(points: DataFrame, spark: SparkSession, key: str,
                     F.col("_e.rk").alias("rk")))
 
 
-def knn_oracle_sql(points_src: str, key: str, k: int = 3,
-                   n_st: int = 25, fi: str = "fi", la: str = "la") -> str:
+def knn_oracle_sql(points_src: str, key: str) -> str:
     """Brute-force oracle: cross join + window, identical distance
     arithmetic and (dist2, station_id) tie-break."""
     return f"""
 (SELECT {key}, station_id, dist2, rk FROM (
    SELECT p.{key} AS {key}, s.station_id AS station_id,
-          (p.{fi} - s.s_fi) * (p.{fi} - s.s_fi)
-          + ({_f(LA_FACTOR)} * (p.{la} - s.s_la)) * ({_f(LA_FACTOR)} * (p.{la} - s.s_la)) AS dist2,
+          (p.fi - s.s_fi) * (p.fi - s.s_fi)
+          + ({_f(LA_FACTOR)} * (p.la - s.s_la)) * ({_f(LA_FACTOR)} * (p.la - s.s_la)) AS dist2,
           row_number() OVER (
             PARTITION BY p.{key}
-            ORDER BY (p.{fi} - s.s_fi) * (p.{fi} - s.s_fi)
-                     + ({_f(LA_FACTOR)} * (p.{la} - s.s_la)) * ({_f(LA_FACTOR)} * (p.{la} - s.s_la)) ASC,
+            ORDER BY (p.fi - s.s_fi) * (p.fi - s.s_fi)
+                     + ({_f(LA_FACTOR)} * (p.la - s.s_la)) * ({_f(LA_FACTOR)} * (p.la - s.s_la)) ASC,
                      s.station_id ASC) AS rk
-   FROM {points_src} p CROSS JOIN {stations_values_sql(n_st)} s
- ) q WHERE rk <= {k})
+   FROM {points_src} p CROSS JOIN {stations_values_sql()} s
+ ) q WHERE rk <= {KNN_K})
 """
 
 
@@ -169,8 +170,7 @@ RADIUS_DEFAULT = 0.1  # metric units of _dist2's sqrt (≈11 km N-S)
 
 
 def radius_join(points: DataFrame, spark: SparkSession,
-                fi_col: str = "fi", la_col: str = "la",
-                radius: float = RADIUS_DEFAULT, n_st: int = 25) -> DataFrame:
+                radius: float = RADIUS_DEFAULT) -> DataFrame:
     """ε-distance join — [NORTH-RULE] (SURVEY.md §3.6 spatial joins):
     every (point, station) pair with ``dist2 <= radius²``.  Unlike
     :func:`knn_join` (top-k per point) this is a within-distance join
@@ -180,7 +180,7 @@ def radius_join(points: DataFrame, spark: SparkSession,
     Stations register in every cell within the radius ring
     (:func:`_station_rings`), points equi-join on their codegen cell
     id, then the exact predicate filters.  Candidate fan-out per point
-    is O(stations nearby), not O(n_st); the plan is Scan →
+    is O(stations nearby), not O(N_STATIONS); the plan is Scan →
     BroadcastHashJoin ×2 → Filter, no BroadcastNestedLoopJoin, no
     shuffle of the point side.
 
@@ -198,17 +198,16 @@ def radius_join(points: DataFrame, spark: SparkSession,
     The predicate is pure ``*``/``-``/``+`` on float64 (no libm), so
     Spark and the DuckDB oracle agree bit-for-bit with no tolerance.
     """
-    points = points.filter(F.col(fi_col).isNotNull()
-                           & F.col(la_col).isNotNull())
-    st = stations_df(spark, n_st)
+    points = points.filter(F.col("fi").isNotNull()
+                           & F.col("la").isNotNull())
+    st = stations_df(spark)
     r2 = radius * radius
-    pos = station_positions(n_st)
-    rings = _station_rings(spark, pos, radius)
+    rings = _station_rings(spark, station_positions(), radius)
     from ..kernels import cell_col
-    in_bbox = (F.col(fi_col).between(BBOX_FI_MIN, BBOX_FI_MAX)
-               & F.col(la_col).between(BBOX_LA_MIN, BBOX_LA_MAX))
+    in_bbox = (F.col("fi").between(BBOX_FI_MIN, BBOX_FI_MAX)
+               & F.col("la").between(BBOX_LA_MIN, BBOX_LA_MAX))
     pts = (points.filter(in_bbox)
-           .withColumn("cell", cell_col(F.col(fi_col), F.col(la_col),
+           .withColumn("cell", cell_col(F.col("fi"), F.col("la"),
                                         KNN_CELL_RES)))
     cand = (pts.join(F.broadcast(rings), "cell")
             .join(F.broadcast(st), "station_id")
@@ -216,20 +215,19 @@ def radius_join(points: DataFrame, spark: SparkSession,
     if points.filter(~in_bbox).limit(1).count():
         cand = cand.unionByName(
             points.filter(~in_bbox).join(F.broadcast(st)))
-    return (cand.withColumn("dist2", _dist2(fi_col, la_col))
+    return (cand.withColumn("dist2", _dist2())
             .filter(F.col("dist2") <= F.lit(r2))
             .drop("s_fi", "s_la", "s_cell"))
 
 
 def radius_oracle_sql(points_src: str, key: str,
-                      radius: float = RADIUS_DEFAULT, n_st: int = 25,
-                      fi: str = "fi", la: str = "la") -> str:
+                      radius: float = RADIUS_DEFAULT) -> str:
     """Brute-force oracle: cross join + the identical exact predicate."""
-    d2 = (f"(p.{fi} - s.s_fi) * (p.{fi} - s.s_fi) "
-          f"+ ({_f(LA_FACTOR)} * (p.{la} - s.s_la)) "
-          f"* ({_f(LA_FACTOR)} * (p.{la} - s.s_la))")
+    d2 = (f"(p.fi - s.s_fi) * (p.fi - s.s_fi) "
+          f"+ ({_f(LA_FACTOR)} * (p.la - s.s_la)) "
+          f"* ({_f(LA_FACTOR)} * (p.la - s.s_la))")
     return f"""
 (SELECT p.{key} AS {key}, s.station_id AS station_id, {d2} AS dist2
- FROM {points_src} p CROSS JOIN {stations_values_sql(n_st)} s
+ FROM {points_src} p CROSS JOIN {stations_values_sql()} s
  WHERE {d2} <= {_f(radius * radius)})
 """

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_BITS = 16          # per-dimension quantization (32-bit combined key)
+Z_FILES = 8          # files (key ranges) of the clustered layout
 
 # working bbox — matches functions/sqlgen.py's point generators
 FI_MIN, FI_SPAN = 45.25, 1.75
@@ -62,35 +63,34 @@ def zorder_key_col(fi: str, la: str) -> Column:
     return F.expr(zorder_key_sql(fi, la))
 
 
-def zorder_keys(points: DataFrame, key: str = "k",
-                n_files: int = 8) -> DataFrame:
+def zorder_keys(points: DataFrame) -> DataFrame:
     """(k, zkey, file_id): the layout assignment a Z-ordered write
     would produce — file_id is the equi-depth key-range bucket, i.e.
-    repartitionByRange(n_files, zkey) with deterministic quantile
+    repartitionByRange(Z_FILES, zkey) with deterministic quantile
     boundaries (ntile over zkey order, ties broken by k so the
     assignment is total and oracle-reproducible)."""
     from pyspark.sql import Window
-    d = points.select(F.col(key).alias("k"),
+    d = points.select("k",
                       zorder_key_col("fi", "la").alias("zkey"))
     w = Window.orderBy("zkey", "k")
-    return (d.withColumn("file_id", F.ntile(n_files).over(w))
+    return (d.withColumn("file_id", F.ntile(Z_FILES).over(w))
             .select("k", "zkey", F.col("file_id").cast("int").alias("file_id")))
 
 
-def zorder_keys_sql(points_sql: str, n_files: int = 8) -> str:
+def zorder_keys_sql(points_sql: str) -> str:
     zk = zorder_key_sql("fi", "la")
     return f"""
-SELECT k, zkey, cast(ntile({n_files}) OVER (ORDER BY zkey, k) as int)
+SELECT k, zkey, cast(ntile({Z_FILES}) OVER (ORDER BY zkey, k) as int)
          AS file_id
 FROM (SELECT k, {zk} AS zkey FROM {points_sql} qp) qz
 """
 
 
-def zorder_write(points: DataFrame, path: str, n_files: int = 8) -> None:
+def zorder_write(points: DataFrame, path: str) -> None:
     """The actual clustered write: range-partition on zkey, sort
     within partitions, one parquet file per range — every file footer
     then carries a tight (fi, la) min/max box."""
     d = points.withColumn("zkey", zorder_key_col("fi", "la"))
-    (d.repartitionByRange(n_files, "zkey")
+    (d.repartitionByRange(Z_FILES, "zkey")
      .sortWithinPartitions("zkey")
      .write.mode("overwrite").parquet(path))

@@ -5,10 +5,10 @@ text (input_hint's ``html:binary`` is the testbed here).  This module
 implements the Spark-side plumbing for decode / feature-extract as
 ``mapInPandas`` over Arrow batches — schema, partitioning, UDF
 signature, and batch shape are real and tested; the actual media
-decoders are STUBBED (no image/audio libs in this container) behind
-:func:`decode_media`, which raises ``NotImplementedError`` for real
-codecs and provides a deterministic byte-level fake ('raw') so the
-pipeline is exercisable end-to-end.
+decoders are STUBBED (no image/audio libs in this container):
+:func:`extract_features` reads the raw payload bytes, and
+:func:`decode_media` raises ``NotImplementedError`` for real codecs
+(it is where a decoder would plug in).
 """
 
 from __future__ import annotations
@@ -98,20 +98,14 @@ def _raw_features(payloads: list[bytes]) -> dict[str, np.ndarray]:
     return {"lens": lens, "mean": mean, "ent": ent, "magic": magic}
 
 
-def extract_features(df: DataFrame, payload_col: str = "html",
-                     codec: str = "raw") -> DataFrame:
-    """Per-doc byte-level features via mapInPandas (Arrow batches in,
-    Arrow batches out).  The 'raw' path is fully vectorized over the
-    batch; non-raw codecs go through :func:`decode_media` per payload
-    (the honest shape for variable-length media decode — and stubbed
-    in this container anyway)."""
+def extract_features(df: DataFrame) -> DataFrame:
+    """Per-doc byte-level features of the raw ``html`` payload via
+    mapInPandas (Arrow batches in, Arrow batches out), vectorized over
+    the batch."""
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [bytes(p) for p in pdf[payload_col]]
-            if codec != "raw":  # stub path: exercises decode_media
-                payloads = [decode_media(p, codec).tobytes()
-                            for p in payloads]
+            payloads = [bytes(p) for p in pdf["html"]]
             r = _raw_features(payloads)
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].astype("int64"),
@@ -121,7 +115,7 @@ def extract_features(df: DataFrame, payload_col: str = "html",
                 "magic": pd.Series(r["magic"], dtype=object),
             })
 
-    return df.select("doc_id", payload_col).mapInPandas(_gen, FEATURE_SCHEMA)
+    return df.select("doc_id", "html").mapInPandas(_gen, FEATURE_SCHEMA)
 
 
 def html_binary(docs: DataFrame) -> DataFrame:
@@ -141,31 +135,29 @@ FRAME_BYTES = 16
 FRAME_STRIDE = 4
 
 
-def frame_sample(df: DataFrame, payload_col: str = "html",
-                 frame_bytes: int = FRAME_BYTES,
-                 stride: int = FRAME_STRIDE) -> DataFrame:
-    """Every ``stride``-th ``frame_bytes``-byte frame of the binary
-    payload: (doc_id, n_frames, n_sampled, sample_md5).
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Every FRAME_STRIDE-th FRAME_BYTES-byte frame of the binary
+    ``html`` payload: (doc_id, n_frames, n_sampled, sample_md5).
 
     The "video" is the opaque binary column; frames are fixed-size
     byte windows (decode stays stubbed per the brief — a real codec
     would swap in at :func:`decode_media`); sampling keeps frames
-    0, stride, 2·stride, …  The whole operator is pure Catalyst
+    0, FRAME_STRIDE, 2·FRAME_STRIDE, …  The whole operator is pure Catalyst
     codegen — hex once, slice frames with ``transform(sequence(...))``
     over the hex string, fingerprint the concatenation — so the hot
     path never leaves the JVM and the plan is map-only: at 10¹² docs
     this is the cheapest possible shape (no Arrow crossing, no
     shuffle).  Trailing partial frames are excluded (codec semantics:
     only whole frames decode)."""
-    fb2 = frame_bytes * 2
-    d = (df.select("doc_id", F.hex(F.col(payload_col)).alias("hx"))
+    fb2 = FRAME_BYTES * 2
+    d = (df.select("doc_id", F.hex(F.col("html")).alias("hx"))
          .withColumn("n_frames",
                      F.floor(F.length("hx") / F.lit(fb2)).cast("bigint"))
          .withColumn("idxs",
                      F.when(F.col("n_frames") > 0,
                             F.sequence(F.lit(0).cast("bigint"),
                                        F.col("n_frames") - 1,
-                                       F.lit(stride).cast("bigint")))
+                                       F.lit(FRAME_STRIDE).cast("bigint")))
                      .otherwise(F.array().cast("array<bigint>"))))
     sampled = F.array_join(
         F.transform("idxs", lambda j: F.col("hx").substr(
@@ -175,15 +167,14 @@ def frame_sample(df: DataFrame, payload_col: str = "html",
                     F.md5(sampled).alias("sample_md5"))
 
 
-def frame_sample_sql(src: str, frame_bytes: int = FRAME_BYTES,
-                     stride: int = FRAME_STRIDE) -> str:
-    fb2 = frame_bytes * 2
+def frame_sample_sql(src: str) -> str:
+    fb2 = FRAME_BYTES * 2
     return f"""
 (SELECT doc_id, n_frames,
-        cast(CASE WHEN n_frames > 0 THEN (n_frames - 1) // {stride} + 1
+        cast(CASE WHEN n_frames > 0 THEN (n_frames - 1) // {FRAME_STRIDE} + 1
                   ELSE 0 END as bigint) AS n_sampled,
         md5(CASE WHEN n_frames > 0 THEN array_to_string(
-              list_transform(range(0, cast(n_frames as bigint), {stride}),
+              list_transform(range(0, cast(n_frames as bigint), {FRAME_STRIDE}),
                              j -> substring(hx, cast(j * {fb2} + 1 as int),
                                             {fb2})), '')
             ELSE '' END) AS sample_md5

@@ -48,6 +48,7 @@ from ..constants import BBOX_FI_MAX, BBOX_FI_MIN, BBOX_LA_MAX, BBOX_LA_MIN
 from ..functions.sqlgen import f as _f
 
 N_VERTS = 8
+N_MUN = 20        # municipalities at test scale (212 at bench scale)
 PIP_CELL_RES = 6  # prefilter resolution (~0.0068° ≈ 500–750 m cells)
 
 
@@ -60,7 +61,7 @@ def _mix01(i: int, mult: int) -> float:
     return ((i * mult) % 1000000) / 1000000.0
 
 
-def municipality_polygons(n_mun: int = 20) -> np.ndarray:
+def municipality_polygons(n_mun: int = N_MUN) -> np.ndarray:
     """(n_mun, N_VERTS, 2) lon/lat vertex array, CCW convex octagons."""
     out = np.empty((n_mun, N_VERTS, 2), dtype=np.float64)
     for i in range(n_mun):
@@ -75,12 +76,12 @@ def municipality_polygons(n_mun: int = 20) -> np.ndarray:
     return out
 
 
-def municipalities_values_sql(n_mun: int = 20) -> str:
+def municipalities_values_sql() -> str:
     """VALUES table (mun_id, v0x, v0y, …, v7x, v7y) with exact float64
     literals — the oracle's copy of the polygon table."""
-    polys = municipality_polygons(n_mun)
+    polys = municipality_polygons()
     rows = []
-    for i in range(n_mun):
+    for i in range(N_MUN):
         vals = ", ".join(
             f"{_f(polys[i, v, 0])}, {_f(polys[i, v, 1])}" for v in range(N_VERTS)
         )
@@ -90,16 +91,17 @@ def municipalities_values_sql(n_mun: int = 20) -> str:
             f"AS m(mun_id, {cols}))")
 
 
-def pip_oracle_condition(px: str = "p.la", py: str = "p.fi") -> str:
-    """Convex containment as AND of half-plane tests (CCW ⇒ every edge
-    cross product ≥ 0).  Strict/non-strict choice is irrelevant off the
-    boundary; fixture points never lie exactly on an edge."""
+def pip_oracle_condition() -> str:
+    """Convex containment of point ``p(fi, la)`` in polygon ``m`` as AND
+    of half-plane tests (CCW ⇒ every edge cross product ≥ 0).
+    Strict/non-strict choice is irrelevant off the boundary; fixture
+    points never lie exactly on an edge."""
     conds = []
     for v in range(N_VERTS):
         w = (v + 1) % N_VERTS
         conds.append(
-            f"((m.v{w}x - m.v{v}x) * (({py}) - m.v{v}y) - "
-            f"(m.v{w}y - m.v{v}y) * (({px}) - m.v{v}x) >= {_f(0.0)})"
+            f"((m.v{w}x - m.v{v}x) * ((p.fi) - m.v{v}y) - "
+            f"(m.v{w}y - m.v{v}y) * ((p.la) - m.v{v}x) >= {_f(0.0)})"
         )
     return "(" + " AND ".join(conds) + ")"
 
@@ -173,12 +175,12 @@ def _cover_rows(n_mun: int) -> tuple[tuple, ...]:
     return tuple(rows)
 
 
-def cover_df(spark: SparkSession, n_mun: int = 20) -> DataFrame:
+def cover_df(spark: SparkSession) -> DataFrame:
     """The broadcast side: (cell, interior, mun_id, v0x … v7y), one row
     per interior or boundary cover cell."""
     schema = ("mun_id int, cover array<bigint>, n_interior int, "
               + ", ".join(f"{c} double" for c in VERTEX_COLS))
-    return (spark.createDataFrame(list(_cover_rows(n_mun)), schema)
+    return (spark.createDataFrame(list(_cover_rows(N_MUN)), schema)
             .select(F.expr("inline(transform(cover, (c, i) -> named_struct("
                            "'cell', c, 'interior', i < n_interior)))"),
                     "mun_id", *VERTEX_COLS))
@@ -201,19 +203,16 @@ def raycast_sql(px: str, py: str, verts: list[tuple[str, str]]) -> str:
     return f"(({' + '.join(terms)}) % 2 = 1)"
 
 
-def pip_join(points: DataFrame, spark: SparkSession,
-             fi_col: str = "fi", la_col: str = "la",
-             n_mun: int = 20) -> DataFrame:
+def pip_join(points: DataFrame, spark: SparkSession) -> DataFrame:
     """points (big) ⋈ municipalities (tiny broadcast) → rows + mun_id.
 
     Plan shape: codegen cell encode → BroadcastHashJoin on cover cell
     with ``interior OR ray cast`` in its condition.  The point side is
     never shuffled, and the join adds no Python crossing.
     """
-    refine = raycast_sql(f"`{la_col}`", f"`{fi_col}`", VERTS)
-    pts = points.withColumn(
-        "cell", _cell(F.col(fi_col), F.col(la_col)))
-    return (pts.join(F.broadcast(cover_df(spark, n_mun)), "cell", "inner")
+    refine = raycast_sql("`la`", "`fi`", VERTS)
+    pts = points.withColumn("cell", _cell(F.col("fi"), F.col("la")))
+    return (pts.join(F.broadcast(cover_df(spark)), "cell", "inner")
             .filter(F.expr(f"interior OR {refine}"))
             .drop("cell", "interior", *VERTEX_COLS))
 

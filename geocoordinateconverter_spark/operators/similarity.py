@@ -30,21 +30,26 @@ from ..functions.sqlgen import f as _flit
 
 DIM = 64
 N_PLANES = 8
+# every top-k operator and its twin answer the same query set: each
+# 50th corpus vector, scored against the rest of the corpus
+QUERY_FILTER = "vec_id % 50 = 0"
+TOP_K = 5        # neighbours returned per query
+N_PROBE = 3      # IVF cells probed per query (nprobe operators)
 
 
 def _elem(col: str, i: int) -> Column:
     return F.element_at(F.col(col), i).cast("double")
 
 
-def dot_col(a: str, b: str, dim: int = DIM) -> Column:
+def dot_col(a: str, b: str) -> Column:
     """Unrolled left-associated Σ aᵢ·bᵢ (codegen-side, order-fixed)."""
     expr = _elem(a, 1) * _elem(b, 1)
-    for i in range(2, dim + 1):
+    for i in range(2, DIM + 1):
         expr = expr + _elem(a, i) * _elem(b, i)
     return expr
 
 
-def dot_sql(a: str, b: str, dim: int = DIM) -> str:
+def dot_sql(a: str, b: str) -> str:
     """Long-form DuckDB fold: ``list_reduce`` is an explicit
     left-associated accumulation in element order, so the float64 sum
     is bit-identical to the unrolled Catalyst expression of
@@ -52,17 +57,17 @@ def dot_sql(a: str, b: str, dim: int = DIM) -> str:
     r4→r5 rewrite — VERDICT r4 Next #1a — shrank every ANN oracle from
     O(dim) unrolled terms to O(1) text so a 50-query driver sweep can
     never again pin the shared DuckDB connection's pool)."""
-    return (f"list_reduce(list_transform(generate_series(1, {dim}), "
+    return (f"list_reduce(list_transform(generate_series(1, {DIM}), "
             f"__d -> cast(({a})[__d] as double) * cast(({b})[__d] as double)), "
             f"(__x, __y) -> __x + __y)")
 
 
-def norm2_col(a: str, dim: int = DIM) -> Column:
-    return dot_col(a, a, dim)
+def norm2_col(a: str) -> Column:
+    return dot_col(a, a)
 
 
-def norm2_sql(a: str, dim: int = DIM) -> str:
-    return dot_sql(a, a, dim)
+def norm2_sql(a: str) -> str:
+    return dot_sql(a, a)
 
 
 def plane_coef(p: int, d: int) -> float:
@@ -70,14 +75,14 @@ def plane_coef(p: int, d: int) -> float:
     return (((p * DIM + d + 1) * 2654435761) % 1000000) / 1000000.0 - 0.5
 
 
-def plane_proj_sql(a: str, p: int, dim: int = DIM) -> str:
+def plane_proj_sql(a: str, p: int) -> str:
     """Hyperplane projection with the coefficient CLOSED FORM evaluated
     inside the fold lambda (same integer mixing as :func:`plane_coef`;
     the int→double division and −0.5 are the identical IEEE ops both
     engines run, so no literals are needed)."""
     coef = (f"(cast((({p} * {DIM} + __d) * 2654435761) % 1000000 as double) "
             f"/ 1000000.0e0 - 0.5e0)")
-    return (f"list_reduce(list_transform(generate_series(1, {dim}), "
+    return (f"list_reduce(list_transform(generate_series(1, {DIM}), "
             f"__d -> {coef} * cast(({a})[__d] as double)), "
             f"(__x, __y) -> __x + __y)")
 
@@ -89,8 +94,8 @@ def lsh_bucket_sql(a: str) -> str:
     return "(" + terms + ")"
 
 
-def brute_force_topk(emb: DataFrame, k: int = 5,
-                     query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def brute_force_topk(emb: DataFrame, k: int = TOP_K,
+                     query_filter: str = QUERY_FILTER) -> DataFrame:
     """Exact top-k cosine neighbours for the filtered query vectors.
 
     Plan (r6): one Arrow map pass over the corpus scores whole batches
@@ -100,12 +105,12 @@ def brute_force_topk(emb: DataFrame, k: int = 5,
     can still reach the global top-k, and the window ranks the few
     surviving candidates.  See the kernel section below.
     """
-    return _rank_topk(_topk_candidates(emb, "brute", k, query_filter),
-                      k, "cos_sim")
+    return _rank_topk(
+        _topk_candidates(emb, "brute", k, query_filter=query_filter),
+        k, "cos_sim")
 
 
-def brute_force_topk_sql(k: int = 5,
-                         query_filter: str = "vec_id % 50 = 0") -> str:
+def brute_force_topk_sql() -> str:
     dot = dot_sql("q.q_emb", "c.embedding")
     n1 = norm2_sql("q.q_emb")
     n2 = norm2_sql("c.embedding")
@@ -117,9 +122,9 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
             ORDER BY {dot} / sqrt({n1} * {n2}) DESC, c.vec_id ASC) AS rk
   FROM embeddings c
   CROSS JOIN (SELECT vec_id AS q_id, embedding AS q_emb
-              FROM embeddings WHERE {query_filter}) q
+              FROM embeddings WHERE {QUERY_FILTER}) q
   WHERE c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
@@ -146,8 +151,7 @@ def lsh_buckets_sql() -> str:
             f"FROM embeddings")
 
 
-def lsh_topk(emb: DataFrame, k: int = 5,
-             query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def lsh_topk(emb: DataFrame) -> DataFrame:
     """IVF/LSH-bucketed ANN: candidates limited to vectors sharing the
     query's hyperplane bucket, then exact-cosine rerank.  This is the
     scale path — candidate generation is ONE hash-equi-join on the
@@ -156,11 +160,10 @@ def lsh_topk(emb: DataFrame, k: int = 5,
     bucket rule so results still compare exactly.  r6: candidate
     generation + scoring run in the Arrow kernel (bucket mask instead
     of the bucket equi-join), bit-identical output."""
-    return _rank_topk(_topk_candidates(emb, "lsh", k, query_filter),
-                      k, "cos_sim")
+    return _rank_topk(_topk_candidates(emb, "lsh", TOP_K), TOP_K, "cos_sim")
 
 
-def lsh_topk_sql(k: int = 5, query_filter: str = "vec_id % 50 = 0") -> str:
+def lsh_topk_sql() -> str:
     dot = dot_sql("q.q_emb", "c.embedding")
     n1 = norm2_sql("q.q_emb")
     n2 = norm2_sql("c.embedding")
@@ -174,14 +177,16 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
             ORDER BY {dot} / sqrt({n1} * {n2}) DESC, c.vec_id ASC) AS rk
   FROM embeddings c
   JOIN (SELECT vec_id AS q_id, embedding AS q_emb
-        FROM embeddings WHERE {query_filter}) q
+        FROM embeddings WHERE {QUERY_FILTER}) q
     ON {cb} = {qb} AND c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
-def cosine_near_dup(emb: DataFrame, threshold: float = 0.9,
-                    id_window: int = 50) -> DataFrame:
+COS_ID_WINDOW = 50  # cosine_near_dup: partner vec_id distance bound
+
+
+def cosine_near_dup(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-dup pairs within a doc_id window.
 
     The window predicate ``id_a < id_b <= id_a + W`` alone has no
@@ -194,7 +199,7 @@ def cosine_near_dup(emb: DataFrame, threshold: float = 0.9,
     filter.  Same output rows; plan is SMJ/BHJ, never BNLJ — asserted
     by tools/plan_audit.py's global invariant."""
     emb_n = emb.withColumn("n2", norm2_col("embedding"))
-    blk = F.floor(F.col("vec_id") / F.lit(id_window))
+    blk = F.floor(F.col("vec_id") / F.lit(COS_ID_WINDOW))
     a = emb_n.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
         F.col("n2").alias("na"),
@@ -204,14 +209,14 @@ def cosine_near_dup(emb: DataFrame, threshold: float = 0.9,
                      blk.alias("blk"))
     pairs = (a.join(b, "blk")
              .filter((F.col("id_a") < F.col("id_b"))
-                     & (F.col("id_b") <= F.col("id_a") + id_window))
+                     & (F.col("id_b") <= F.col("id_a") + COS_ID_WINDOW))
              .withColumn("cos", dot_col("ea", "eb")
                          / F.sqrt(F.col("na") * F.col("nb")))
              .filter(F.col("cos") >= threshold))
     return pairs.select("id_a", "id_b", F.round("cos", 9).alias("cos_sim"))
 
 
-def cosine_near_dup_sql(threshold: float = 0.9, id_window: int = 50) -> str:
+def cosine_near_dup_sql(threshold: float = 0.9) -> str:
     dot = dot_sql("a.embedding", "b.embedding")
     na = norm2_sql("a.embedding")
     nb = norm2_sql("b.embedding")
@@ -219,7 +224,7 @@ def cosine_near_dup_sql(threshold: float = 0.9, id_window: int = 50) -> str:
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round({dot} / sqrt({na} * {nb}), 9) AS cos_sim
 FROM embeddings a JOIN embeddings b
-  ON a.vec_id < b.vec_id AND b.vec_id <= a.vec_id + {id_window}
+  ON a.vec_id < b.vec_id AND b.vec_id <= a.vec_id + {COS_ID_WINDOW}
 WHERE {dot} / sqrt({na} * {nb}) >= {threshold!r}e0
 """
 
@@ -254,14 +259,14 @@ def _centroid_halfnorm(c: int) -> float:
     return s / 2.0
 
 
-def ivf_score_sql(a: str, c: int, dim: int = DIM) -> str:
+def ivf_score_sql(a: str, c: int) -> str:
     """Quantizer score x·c − ‖c‖²/2 — centroid coefficients from the
     same closed form as :func:`centroid_coef` inside the fold lambda;
     only the 16 halfnorm literals remain (they are a float64 fold the
     lambda can't reproduce cheaply, and 16 literals cost nothing)."""
     coef = (f"(cast((({c} * {DIM} + __d + 100) * 2246822519) % 1000000 "
             f"as double) / 1000000.0e0 - 0.5e0)")
-    return (f"(list_reduce(list_transform(generate_series(1, {dim}), "
+    return (f"(list_reduce(list_transform(generate_series(1, {DIM}), "
             f"__d -> {coef} * cast(({a})[__d] as double)), "
             f"(__x, __y) -> __x + __y) - {_flit(_centroid_halfnorm(c))})")
 
@@ -284,31 +289,29 @@ def ivf_cluster_udf():
     return _udf
 
 
-def ivf_assign_sql(table: str, id_col: str = "vec_id") -> str:
-    """(id, embedding, cluster) subquery over ``table`` — layered so the
-    16 score expressions appear once each."""
+def ivf_assign_sql(table: str) -> str:
+    """(vec_id, embedding, cluster) subquery over ``table`` — layered so
+    the 16 score expressions appear once each."""
     score_defs = ", ".join(f"{ivf_score_sql('embedding', c)} AS s{c}"
                            for c in range(N_CLUSTERS))
     best = "greatest(" + ", ".join(f"s{c}" for c in range(N_CLUSTERS)) + ")"
     whens = " ".join(f"when s{c} = best then {c}" for c in range(N_CLUSTERS))
     return f"""
-(SELECT {id_col}, embedding, case {whens} else -1 end AS cluster
- FROM (SELECT {id_col}, embedding, {score_defs}, {best} AS best
+(SELECT vec_id, embedding, case {whens} else -1 end AS cluster
+ FROM (SELECT vec_id, embedding, {score_defs}, {best} AS best
        FROM {table}) q_sc)
 """
 
 
-def ivf_topk(emb: DataFrame, k: int = 5,
-             query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def ivf_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     """IVF-flat top-k: candidates limited to the query's quantizer
     cell, exact cosine rerank inside the cell.  r6: cell assignment +
     scoring fused into the Arrow kernel (cell-equality mask replaces
     the equi-join); same float64s, bit-identical output."""
-    return _rank_topk(_topk_candidates(emb, "ivf", k, query_filter),
-                      k, "cos_sim")
+    return _rank_topk(_topk_candidates(emb, "ivf", k), k, "cos_sim")
 
 
-def ivf_topk_sql(k: int = 5, query_filter: str = "vec_id % 50 = 0") -> str:
+def ivf_topk_sql() -> str:
     dot = dot_sql("q.q_emb", "c.embedding")
     n1 = norm2_sql("q.q_emb")
     n2 = norm2_sql("c.embedding")
@@ -321,25 +324,23 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
             ORDER BY {dot} / sqrt({n1} * {n2}) DESC, c.vec_id ASC) AS rk
   FROM {corpus} c
   JOIN (SELECT vec_id AS q_id, embedding AS q_emb, cluster AS q_cluster
-        FROM {ivf_assign_sql("embeddings")} qq WHERE {query_filter}) q
+        FROM {ivf_assign_sql("embeddings")} qq WHERE {QUERY_FILTER}) q
     ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
-def ivf_nprobe_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
-                    query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def ivf_nprobe_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     """IVF-flat with multi-cell probing (VERDICT r2 #5): each query
-    searches its ``nprobe`` best cells instead of 1 — recall rises at
+    searches its N_PROBE best cells instead of 1 — recall rises at
     the cost of a probe-membership mask on the broadcast query side;
     the corpus side is one Arrow map pass (r6 kernel; cells are
     disjoint per query, so no candidate dedup is needed)."""
     return _rank_topk(
-        _topk_candidates(emb, "ivf_nprobe", k, query_filter, nprobe),
-        k, "cos_sim")
+        _topk_candidates(emb, "ivf_nprobe", k), k, "cos_sim")
 
 
-def _ivf_probe_sql(query_filter: str, nprobe: int) -> str:
+def _ivf_probe_sql() -> str:
     """(q_id, q_emb, q_cluster) rows: each query's top-nprobe cells by
     the same per-cell score fold, tie-broken cell-ascending."""
     score_defs = ", ".join(f"{ivf_score_sql('embedding', c)} AS s{c}"
@@ -353,14 +354,13 @@ def _ivf_probe_sql(query_filter: str, nprobe: int) -> str:
    FROM (SELECT q.vec_id AS q_id, q.embedding AS q_emb, g.cell AS cell,
                 case g.cell {whens} end AS score
          FROM (SELECT vec_id, embedding, {score_defs} FROM embeddings
-               WHERE {query_filter}) q
+               WHERE {QUERY_FILTER}) q
          CROSS JOIN (SELECT unnest(range(0, {N_CLUSTERS})) AS cell) g) qs
-  ) qr WHERE prk <= {nprobe})
+  ) qr WHERE prk <= {N_PROBE})
 """
 
 
-def ivf_nprobe_topk_sql(k: int = 5, nprobe: int = 3,
-                        query_filter: str = "vec_id % 50 = 0") -> str:
+def ivf_nprobe_topk_sql() -> str:
     dot = dot_sql("q.q_emb", "c.embedding")
     n1 = norm2_sql("q.q_emb")
     n2 = norm2_sql("c.embedding")
@@ -371,9 +371,9 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
          row_number() OVER (PARTITION BY q.q_id
             ORDER BY {dot} / sqrt({n1} * {n2}) DESC, c.vec_id ASC) AS rk
   FROM {ivf_assign_sql("embeddings")} c
-  JOIN {_ivf_probe_sql(query_filter, nprobe)} q
+  JOIN {_ivf_probe_sql()} q
     ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
@@ -396,6 +396,7 @@ WHERE rk <= {k}
 
 KM_BITS = 24
 KM_SCALE = 1 << KM_BITS  # 16777216
+KM_ITERS = 3  # Lloyd iterations of both fixed-point trainers
 
 
 def _qfloor(x: float) -> int:
@@ -436,7 +437,7 @@ def kmeans_init_q() -> np.ndarray:
                      for c in range(N_CLUSTERS)], dtype=np.int64)
 
 
-def ivf_train_kmeans_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
+def ivf_train_kmeans_exact(emb: DataFrame) -> DataFrame:
     """Learned coarse quantizer, fixed-point Lloyd's, FULLY oracled.
 
     Per iteration: one Arrow assignment pass (exact int64 scores,
@@ -458,7 +459,7 @@ def ivf_train_kmeans_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
     vq = emb.select("vec_id", _vq_expr().alias("q")).persist()
     stats = []
     try:
-        for _ in range(n_iter):
+        for _ in range(KM_ITERS):
             assigned = vq.withColumn("cluster",
                                      _assign_q_udf(Cq)(F.col("q")))
             stats = (assigned
@@ -487,23 +488,6 @@ def ivf_train_kmeans_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
             .select("cluster", "n_vecs", "d", "centroid"))
 
 
-def kmeans_replay_exact(V: np.ndarray, n_iter: int = 3):
-    """Single-machine NumPy replay of the exact trainer (pytest twin).
-    V is the raw float32/float64 embedding matrix."""
-    Q = np.floor(V.astype(np.float64) * KM_SCALE + 0.5).astype(np.int64)
-    Cq = kmeans_init_q()
-    assign = None
-    for _ in range(n_iter):
-        score = 2 * (Q @ Cq.T) - (Cq ** 2).sum(axis=1)
-        assign = score.argmax(axis=1)
-        Cq = Cq.copy()
-        for c in range(N_CLUSTERS):
-            m = assign == c
-            if m.any():
-                Cq[c] = np.floor(Q[m].sum(axis=0) / m.sum() + 0.5)
-    return assign, Cq
-
-
 def _km_c0_sql() -> str:
     """Initial quantized centroids reproduced arithmetically (exact
     integer mixing → float64 division → quantize; every step is
@@ -519,17 +503,17 @@ def _km_c0_sql() -> str:
 """
 
 
-def ivf_train_kmeans_exact_sql(n_iter: int = 3) -> str:
+def ivf_train_kmeans_exact_sql() -> str:
     """DuckDB twin: the same fixed-point Lloyd unrolled as CTE stages.
     Every aggregate is an int64 sum → order-independent → the value
     hash is stable by construction, not by tolerance.
 
-    Verified bit-exact against :func:`kmeans_replay_exact` at
-    n_iter ∈ {1, 3, 5}.  Note the ORACLE's cost (not the engine's)
-    grows steeply with n_iter: DuckDB may inline the chained CTEs, so
-    each extra unrolled iteration re-derives its predecessors — fine
-    at the gate's n_iter=3 (seconds), slow by ~8.  The Spark side is
-    strictly linear in n_iter (one Arrow pass + one agg each)."""
+    Verified bit-exact against the NumPy replay in the tests.  Note the
+    ORACLE's cost (not the engine's) grows steeply with
+    :data:`KM_ITERS`: DuckDB may inline the chained CTEs, so each extra
+    unrolled iteration re-derives its predecessors — fine at 3
+    (seconds), slow by ~8.  The Spark side is strictly linear in the
+    iteration count (one Arrow pass + one agg each)."""
     parts = [f"""
 pts AS (
   SELECT vec_id, gs.i - 1 AS d,
@@ -537,7 +521,7 @@ pts AS (
                     + 0.5e0) AS bigint) AS vq
   FROM embeddings, generate_series(1, {DIM}) AS gs(i)),
 c0 AS (SELECT * FROM {_km_c0_sql()} q_c0)"""]
-    for k in range(1, n_iter + 1):
+    for k in range(1, KM_ITERS + 1):
         p = k - 1
         parts.append(f"""
 ss{p} AS (SELECT cluster, sum(cq * cq) AS ss FROM c{p} GROUP BY cluster),
@@ -563,10 +547,10 @@ c{k} AS (SELECT c.cluster, c.d,
     return f"""
 WITH {body},
 counts AS (SELECT cluster, count(*) AS n_vecs
-           FROM a{n_iter} GROUP BY cluster)
+           FROM a{KM_ITERS} GROUP BY cluster)
 SELECT co.cluster, co.n_vecs, ce.d,
        ce.cq / {KM_SCALE}.0e0 AS centroid
-FROM counts co JOIN c{n_iter} ce ON co.cluster = ce.cluster
+FROM counts co JOIN c{KM_ITERS} ce ON co.cluster = ce.cluster
 """
 
 
@@ -729,33 +713,33 @@ def _pq_score_sql(vec: str, m: str, j: str) -> str:
     return f"({dot} - {half})"
 
 
-def pq_codes_sql(table: str = "embeddings",
-                 id_col: str = "vec_id") -> str:
-    """(id, codes LIST) subquery: long-form grid (id × m × j), argmax
-    via row_number, list() re-assembled in m order."""
+def pq_codes_sql() -> str:
+    """(vec_id, codes LIST) subquery over ``embeddings``: long-form
+    grid (vec_id × m × j), argmax via row_number, list() re-assembled
+    in m order."""
     score = _pq_score_sql("embedding", "g.m", "g.j")
     return f"""
-(SELECT {id_col}, list(code ORDER BY m) AS codes FROM (
-   SELECT {id_col}, m, j AS code,
-          row_number() OVER (PARTITION BY {id_col}, m
+(SELECT vec_id, list(code ORDER BY m) AS codes FROM (
+   SELECT vec_id, m, j AS code,
+          row_number() OVER (PARTITION BY vec_id, m
                              ORDER BY score DESC, j ASC) AS rk
-   FROM (SELECT t.{id_col}, g.m, g.j, {score} AS score
-         FROM {table} t
+   FROM (SELECT t.vec_id, g.m, g.j, {score} AS score
+         FROM embeddings t
          CROSS JOIN (SELECT m.m, j.j
                      FROM (SELECT unnest(range(0, {PQ_M})) AS m) m,
                           (SELECT unnest(range(0, {PQ_K})) AS j) j) g) sc
-  ) best WHERE rk = 1 GROUP BY {id_col})
+  ) best WHERE rk = 1 GROUP BY vec_id)
 """
 
 
-def pq_lut_sql(query_filter: str = "vec_id % 50 = 0") -> str:
+def pq_lut_sql() -> str:
     """(q_id, q_lut LIST of PQ_M*PQ_K doubles) subquery."""
     score = _pq_score_sql("embedding", f"(__i // {PQ_K})", f"(__i % {PQ_K})")
     return f"""
 (SELECT vec_id AS q_id,
         list_transform(generate_series(0, {PQ_M * PQ_K - 1}),
                        __i -> {score}) AS q_lut
- FROM embeddings WHERE {query_filter})
+ FROM embeddings WHERE {QUERY_FILTER})
 """
 
 
@@ -779,44 +763,40 @@ FROM {pq_codes_sql()} pc
 """
 
 
-def pq_adc_topk(emb: DataFrame, k: int = 5,
-                query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def pq_adc_topk(emb: DataFrame) -> DataFrame:
     """Compressed-domain full scan (all-pairs semantics): corpus codes
     vs broadcast query LUTs, 8-term ADC fold per pair — r6: the fold
     runs as a NumPy gather in the Arrow kernel with task-local top-k
     preselection; every pair is still scored (the full-scan semantics),
     bit-identically."""
-    return _rank_topk(_topk_candidates(emb, "pq_adc", k, query_filter),
-                      k, "adc_score")
+    return _rank_topk(_topk_candidates(emb, "pq_adc", TOP_K), TOP_K,
+                      "adc_score")
 
 
-def pq_adc_topk_sql(k: int = 5,
-                    query_filter: str = "vec_id % 50 = 0") -> str:
+def pq_adc_topk_sql() -> str:
     return f"""
 SELECT q_id, vec_id, rk, round(adc, 9) AS adc_score FROM (
   SELECT q.q_id, c.vec_id, {ADC_FOLD_SQL} AS adc,
          row_number() OVER (PARTITION BY q.q_id
             ORDER BY {ADC_FOLD_SQL} DESC, c.vec_id ASC) AS rk
-  FROM {pq_codes_sql()} c, {pq_lut_sql(query_filter)} q
+  FROM {pq_codes_sql()} c, {pq_lut_sql()} q
   WHERE c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
-def ivfpq_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
-               query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+def ivfpq_topk(emb: DataFrame, k: int = TOP_K,
+               nprobe: int = N_PROBE) -> DataFrame:
     """IVF-PQ: candidates limited to the query's ``nprobe`` coarse
     cells, scored by the ADC fold over 8-byte codes — the corpus path
     reads no raw vectors after ingest.  r6: coarse assignment, encode
     and the ADC gather fused into one Arrow map pass (probe-membership
     mask replaces the cell equi-join); bit-identical output."""
     return _rank_topk(
-        _topk_candidates(emb, "ivfpq", k, query_filter, nprobe),
-        k, "adc_score")
+        _topk_candidates(emb, "ivfpq", k, nprobe), k, "adc_score")
 
 
-def ivfpq_topk_sql(k: int = 5, nprobe: int = 3,
-                   query_filter: str = "vec_id % 50 = 0") -> str:
+def ivfpq_topk_sql() -> str:
     return f"""
 SELECT q_id, vec_id, rk, round(adc, 9) AS adc_score FROM (
   SELECT q.q_id, c.vec_id, {ADC_FOLD_SQL} AS adc,
@@ -826,29 +806,28 @@ SELECT q_id, vec_id, rk, round(adc, 9) AS adc_score FROM (
         FROM {ivf_assign_sql("embeddings")} a
         JOIN {pq_codes_sql()} pc ON a.vec_id = pc.vec_id) c
   JOIN (SELECT p.q_id, p.q_cluster, l.q_lut
-        FROM {_ivf_probe_sql(query_filter, nprobe)} p
-        JOIN {pq_lut_sql(query_filter)} l ON p.q_id = l.q_id) q
+        FROM {_ivf_probe_sql()} p
+        JOIN {pq_lut_sql()} l ON p.q_id = l.q_id) q
     ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
-def pq_recall_report(emb: DataFrame, k: int = 5) -> DataFrame:
-    """recall@k of the two PQ arms vs exact brute-force cosine top-k
-    (same shape as the IVF/LSH recall diagnostics)."""
-    exact = brute_force_topk(emb, k=k).select("q_id", "vec_id")
+def pq_recall_report(emb: DataFrame) -> DataFrame:
+    """recall@TOP_K of the three PQ arms vs exact brute-force cosine
+    top-k (same shape as the IVF/LSH recall diagnostics)."""
+    exact = brute_force_topk(emb).select("q_id", "vec_id")
     nq = exact.select("q_id").distinct().count()  # tiny scalar
     parts = []
-    for mname, df in (("pq_adc", pq_adc_topk(emb, k=k)),
-                      ("ivfpq", ivfpq_topk(emb, k=k, nprobe=3)),
-                      ("ivfpq_rerank",
-                       ivfpq_rerank_topk(emb, k=k, nprobe=3))):
+    for mname, df in (("pq_adc", pq_adc_topk(emb)),
+                      ("ivfpq", ivfpq_topk(emb)),
+                      ("ivfpq_rerank", ivfpq_rerank_topk(emb))):
         parts.append(
             df.select("q_id", "vec_id")
             .join(exact, ["q_id", "vec_id"])
             .agg(F.count("*").alias("n_hits"))
             .select(F.lit(mname).alias("method"), "n_hits",
-                    F.round(F.col("n_hits") / F.lit(float(k * nq)), 9)
+                    F.round(F.col("n_hits") / F.lit(float(TOP_K * nq)), 9)
                     .alias("recall_at_k")))
     out = parts[0]
     for p in parts[1:]:
@@ -856,45 +835,44 @@ def pq_recall_report(emb: DataFrame, k: int = 5) -> DataFrame:
     return out
 
 
-def pq_recall_report_sql(k: int = 5,
-                         query_filter: str = "vec_id % 50 = 0") -> str:
-    exact = brute_force_topk_sql(k=k)
-    nq = f"(SELECT count(*) FROM embeddings WHERE {query_filter})"
+def pq_recall_report_sql() -> str:
+    exact = brute_force_topk_sql()
+    nq = f"(SELECT count(*) FROM embeddings WHERE {QUERY_FILTER})"
     arms = []
-    for mname, arm in (("pq_adc", pq_adc_topk_sql(k=k)),
-                       ("ivfpq", ivfpq_topk_sql(k=k, nprobe=3)),
-                       ("ivfpq_rerank",
-                        ivfpq_rerank_topk_sql(k=k, nprobe=3))):
+    for mname, arm in (("pq_adc", pq_adc_topk_sql()),
+                       ("ivfpq", ivfpq_topk_sql()),
+                       ("ivfpq_rerank", ivfpq_rerank_topk_sql())):
         arms.append(f"""
 SELECT '{mname}' AS method, count(*) AS n_hits,
-       round(count(*) / ({k}.0e0 * {nq}), 9) AS recall_at_k
+       round(count(*) / ({TOP_K}.0e0 * {nq}), 9) AS recall_at_k
 FROM ({arm}) a JOIN exact e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
 """)
     return f"WITH exact AS ({exact})\n" + " UNION ALL ".join(arms)
 
 
-def ivfpq_rerank_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
-                      shortlist: int = 50,
-                      query_filter: str = "vec_id % 50 = 0") -> DataFrame:
+RERANK_SHORTLIST = 50  # ivfpq_rerank_topk: ADC candidates refined per query
+
+
+def ivfpq_rerank_topk(emb: DataFrame) -> DataFrame:
     """IVF-PQ with exact refine (the production pattern): the ADC fold
     ranks candidates inside the probed cells, the per-query top-
-    ``shortlist`` fetch their raw vectors (Q×shortlist rows — a
+    :data:`RERANK_SHORTLIST` fetch their raw vectors (Q×shortlist rows — a
     broadcast-sized refine read at any corpus scale), and exact cosine
     reranks to top-k.  Recovers the quantization error the codes
     introduce; the only loss left is coarse-cell miss (the
     ivf_nprobe bound).  r6: the ADC shortlist stage runs in the Arrow
-    kernel (task-local top-``shortlist`` preselection), the exact
-    refine below is unchanged."""
-    cand = _topk_candidates(emb, "ivfpq", shortlist, query_filter, nprobe)
+    kernel (task-local top-``RERANK_SHORTLIST`` preselection), the
+    exact refine below is unchanged."""
+    cand = _topk_candidates(emb, "ivfpq", RERANK_SHORTLIST)
     w_adc = Window.partitionBy("q_id").orderBy(F.col("score").desc(),
                                                F.col("vec_id").asc())
     short = (cand.withColumn("ark", F.row_number().over(w_adc))
-             .filter(F.col("ark") <= shortlist)
+             .filter(F.col("ark") <= RERANK_SHORTLIST)
              .select("q_id", "vec_id"))
     # refine: raw vectors only for the Q×shortlist survivors
     raw = emb.select("vec_id", "embedding",
                      norm2_col("embedding").alias("n2"))
-    qraw = (emb.filter(query_filter)
+    qraw = (emb.filter(QUERY_FILTER)
             .select(F.col("vec_id").alias("q_id"),
                     F.col("embedding").alias("q_emb"),
                     norm2_col("embedding").alias("q_n2")))
@@ -907,13 +885,12 @@ def ivfpq_rerank_topk(emb: DataFrame, k: int = 5, nprobe: int = 3,
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
                                            F.col("vec_id").asc())
     return (rer.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+            .filter(F.col("rk") <= TOP_K)
             .select("q_id", "vec_id", "rk",
                     F.round("cos", 9).alias("cos_sim")))
 
 
-def ivfpq_rerank_topk_sql(k: int = 5, nprobe: int = 3, shortlist: int = 50,
-                          query_filter: str = "vec_id % 50 = 0") -> str:
+def ivfpq_rerank_topk_sql() -> str:
     dot = dot_sql("qe.embedding", "e.embedding")
     n1 = norm2_sql("qe.embedding")
     n2 = norm2_sql("e.embedding")
@@ -931,13 +908,13 @@ SELECT q_id, vec_id, rk, round(cos, 9) AS cos_sim FROM (
                 FROM {ivf_assign_sql("embeddings")} a
                 JOIN {pq_codes_sql()} pc ON a.vec_id = pc.vec_id) c
           JOIN (SELECT p.q_id, p.q_cluster, l.q_lut
-                FROM {_ivf_probe_sql(query_filter, nprobe)} p
-                JOIN {pq_lut_sql(query_filter)} l ON p.q_id = l.q_id) q
+                FROM {_ivf_probe_sql()} p
+                JOIN {pq_lut_sql()} l ON p.q_id = l.q_id) q
             ON c.cluster = q.q_cluster AND c.vec_id <> q.q_id) zz
-        WHERE ark <= {shortlist}) s
+        WHERE ark <= {RERANK_SHORTLIST}) s
   JOIN embeddings e ON s.vec_id = e.vec_id
   JOIN embeddings qe ON s.q_id = qe.vec_id) z
-WHERE rk <= {k}
+WHERE rk <= {TOP_K}
 """
 
 
@@ -974,7 +951,7 @@ def _pq_assign_q_udf(Cq: np.ndarray):
     return _udf
 
 
-def pq_train_codebooks_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
+def pq_train_codebooks_exact(emb: DataFrame) -> DataFrame:
     """(m, cluster, n_vecs, d, centroid): PQ_M independent sub-space
     k-means runs, trained jointly in the SAME passes — one Arrow
     assignment crossing and one integer groupBy per iteration cover
@@ -991,7 +968,7 @@ def pq_train_codebooks_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
     vq = emb.select("vec_id", _vq_expr().alias("q")).persist()
     stats = []
     try:
-        for _ in range(n_iter):
+        for _ in range(KM_ITERS):
             assigned = vq.withColumn("codes",
                                      _pq_assign_q_udf(Cq)(F.col("q")))
             stats = (assigned
@@ -1022,27 +999,6 @@ def pq_train_codebooks_exact(emb: DataFrame, n_iter: int = 3) -> DataFrame:
         "m int, cluster int, d int, centroid double")
     return (counts.join(F.broadcast(cent), ["m", "cluster"])
             .select("m", "cluster", "n_vecs", "d", "centroid"))
-
-
-def pq_train_replay_exact(V: np.ndarray, n_iter: int = 3):
-    """NumPy replay twin (pytest): returns (codes, Cq)."""
-    Q = np.floor(V.astype(np.float64) * KM_SCALE + 0.5).astype(np.int64)
-    Cq = pq_init_q()
-    codes = None
-    for _ in range(n_iter):
-        codes = np.empty((Q.shape[0], PQ_M), dtype=np.int64)
-        ss = np.einsum("mjd,mjd->mj", Cq, Cq)
-        for m in range(PQ_M):
-            Xm = Q[:, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
-            codes[:, m] = (2 * (Xm @ Cq[m].T) - ss[m]).argmax(axis=1)
-        Cq = Cq.copy()
-        for m in range(PQ_M):
-            for j in range(PQ_K):
-                msk = codes[:, m] == j
-                if msk.any():
-                    Xm = Q[msk, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
-                    Cq[m, j] = np.floor(Xm.sum(axis=0) / msk.sum() + 0.5)
-    return codes, Cq
 
 
 # ---------------------------------------------------------------------------
@@ -1165,8 +1121,9 @@ def _probes_np(X: np.ndarray, nprobe: int) -> np.ndarray:
     return np.argsort(-_ivf_scores_np(X), axis=1, kind="stable")[:, :nprobe]
 
 
-def _topk_candidates(emb: DataFrame, mode: str, k: int, query_filter: str,
-                     nprobe: int = 3) -> DataFrame:
+def _topk_candidates(emb: DataFrame, mode: str, k: int,
+                     nprobe: int = N_PROBE,
+                     query_filter: str = QUERY_FILTER) -> DataFrame:
     """(q_id, vec_id, score) candidate rows whose union provably
     contains every query's global top-k under (score DESC, vec_id ASC):
     per task, every candidate scoring >= that task's kth-best score for
@@ -1264,7 +1221,7 @@ def _pq_c0_sql() -> str:
 """
 
 
-def pq_train_codebooks_exact_sql(n_iter: int = 3) -> str:
+def pq_train_codebooks_exact_sql() -> str:
     """DuckDB twin: the per-subspace Lloyd unrolled as CTE stages —
     the ivf_train_kmeans_exact_sql recurrence with the composite
     (m, cluster) key."""
@@ -1276,7 +1233,7 @@ pts AS (
                     + 0.5e0) AS bigint) AS vq
   FROM embeddings, generate_series(1, {DIM}) AS gs(i)),
 c0 AS (SELECT * FROM {_pq_c0_sql()} q_c0)"""]
-    for k in range(1, n_iter + 1):
+    for k in range(1, KM_ITERS + 1):
         p = k - 1
         parts.append(f"""
 ss{p} AS (SELECT m, cluster, sum(cq * cq) AS ss
@@ -1304,9 +1261,9 @@ c{k} AS (SELECT c.m, c.cluster, c.dl,
     return f"""
 WITH {body},
 counts AS (SELECT m, cluster, count(*) AS n_vecs
-           FROM a{n_iter} GROUP BY m, cluster)
+           FROM a{KM_ITERS} GROUP BY m, cluster)
 SELECT co.m, co.cluster, co.n_vecs, ce.dl AS d,
        ce.cq / {KM_SCALE}.0e0 AS centroid
-FROM counts co JOIN c{n_iter} ce
+FROM counts co JOIN c{KM_ITERS} ce
   ON co.m = ce.m AND co.cluster = ce.cluster
 """

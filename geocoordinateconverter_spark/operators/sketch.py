@@ -47,29 +47,22 @@ def _bucket_duck(i: int, tok_expr: str) -> str:
     return f"{hash60_sql(seeded)} % {CMS_W}"
 
 
-def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
-                      threshold: int = CMS_THRESHOLD,
-                      cache: list | None = None) -> DataFrame:
+def cms_heavy_hitters(docs: DataFrame,
+                      threshold: int = CMS_THRESHOLD) -> DataFrame:
     """(token, est_n, exact_n, overcount) for every token whose CMS
-    estimate reaches ``threshold``; est_n = min over the d row
+    estimate reaches ``threshold``; est_n = min over the CMS_D row
     counters, overcount = est_n - exact_n ≥ 0 (the CMS guarantee,
     asserted in pytest).
 
     The tokenize pass feeds BOTH the grid build (collected eagerly)
-    and the exact-count report side.  Pass a ``cache`` list (simhash
-    contract) to persist the token stream across the two: the persist
-    is appended for the CALLER to unpersist — never leaked into a
-    long-lived session by default."""
+    and the exact-count report side."""
     from .textdedup import tokens
     toks = tokens(docs).select("tok")
-    if cache is not None:
-        toks = toks.persist()
-        cache.append(toks)
     # sketch build: explode d seeded rows, ONE shuffle of ≤ d·w
     # partials per task (map-side combine does the compression)
-    rows = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("i")
+    rows = F.explode(F.array(*[F.lit(i) for i in range(CMS_D)])).alias("i")
     bucket = F.lit(None).cast("bigint")
-    for i in range(d):
+    for i in range(CMS_D):
         bucket = F.when(F.col("i") == i,
                         _bucket_col(i, F.col("tok"))).otherwise(bucket)
     grid = (toks.select("tok", rows)
@@ -83,30 +76,29 @@ def cms_heavy_hitters(docs: DataFrame, d: int = CMS_D,
     spark = docs.sparkSession
     grid_rows = grid.collect()
     out = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    for i in range(d):
+    for i in range(CMS_D):
         g = spark.createDataFrame(
             [(int(r.bucket), int(r.c)) for r in grid_rows if r.i == i],
             f"b{i} bigint, c{i} bigint")
         out = (out.withColumn(f"b{i}", _bucket_col(i, F.col("tok")))
                .join(F.broadcast(g), f"b{i}").drop(f"b{i}"))
     return (out.withColumn("est_n",
-                           F.least(*[F.col(f"c{i}") for i in range(d)]))
+                           F.least(*[F.col(f"c{i}") for i in range(CMS_D)]))
             .filter(F.col("est_n") >= threshold)
             .select(F.col("tok").alias("token"), "est_n", "exact_n",
                     (F.col("est_n") - F.col("exact_n")).alias("overcount")))
 
 
-def cms_heavy_hitters_sql(d: int = CMS_D,
-                          threshold: int = CMS_THRESHOLD) -> str:
+def cms_heavy_hitters_sql() -> str:
     from .textdedup import TOKENS_SQL
     grid_arms = " UNION ALL ".join(
         f"SELECT {i} AS i, {_bucket_duck(i, 'tok')} AS bucket FROM toks"
-        for i in range(d))
+        for i in range(CMS_D))
     joins = " ".join(
         f"JOIN grid g{i} ON g{i}.i = {i} "
         f"AND g{i}.bucket = {_bucket_duck(i, 'e.tok')}"
-        for i in range(d))
-    least = ", ".join(f"g{i}.c" for i in range(d))
+        for i in range(CMS_D))
+    least = ", ".join(f"g{i}.c" for i in range(CMS_D))
     return f"""
 WITH toks AS (SELECT tok FROM {TOKENS_SQL} t),
 grid AS (
@@ -116,5 +108,5 @@ exact AS (SELECT tok, count(*) AS exact_n FROM toks GROUP BY tok)
 SELECT e.tok AS token, least({least}) AS est_n, e.exact_n AS exact_n,
        least({least}) - e.exact_n AS overcount
 FROM exact e {joins}
-WHERE least({least}) >= {threshold}
+WHERE least({least}) >= {CMS_THRESHOLD}
 """

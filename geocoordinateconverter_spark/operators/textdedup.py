@@ -184,18 +184,6 @@ MINHASH_SIG_SQL = f"""
 """
 
 
-def minhash_bands(docs: DataFrame, sig: DataFrame | None = None) -> DataFrame:
-    """(doc_id, band, band_key): md5 over the band's ordered sigs."""
-    if sig is None:
-        sig = minhash_signatures(docs)
-    band = (F.col("perm") / ROWS_PER_BAND).cast("int")
-    return (sig.withColumn("band", band)
-            .groupBy("doc_id", "band")
-            .agg(F.md5(F.concat_ws(",", F.array_sort(
-                F.collect_list(F.format_string("%02d:%d", "perm", "sig"))
-            ))).alias("band_key")))
-
-
 MINHASH_BANDS_SQL = f"""
 (SELECT doc_id, band,
         md5(string_agg(printf('%02d:%d', perm, sig), ',' ORDER BY
@@ -216,8 +204,7 @@ MAX_BUCKET = 50  # skip degenerate buckets (bucket of m docs → m²/2
 # replicates it, so results stay exactly comparable.
 
 
-def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
-                  cache: list | None = None) -> DataFrame:
+def minhash_pairs(docs: DataFrame, cache: list | None = None) -> DataFrame:
     """Candidate near-dup pairs: share ≥1 (non-degenerate) LSH band
     bucket; score = fraction of equal signature components (MinHash
     Jaccard estimate).
@@ -239,7 +226,7 @@ def minhash_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET,
     # r4: the signature table is now MAP-ONLY (minhash_sig_array) —
     # the r3 groupBy(doc_id) signature-assembly exchange is gone too;
     # the banded self-join below is the plan's ONLY shuffle.
-    bands = _banded_sig_frame(docs, max_bucket).persist()
+    bands = _banded_sig_frame(docs).persist()
     if cache is not None:
         cache.append(bands)
     eq = F.size(F.filter(
@@ -356,22 +343,21 @@ SIMHASH_SQL = f"""
 
 SIMHASH_N_BANDS = 4
 SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_N_BANDS
+# by pigeonhole, a pair within this Hamming distance shares a band
+SIMHASH_MAX_HAMMING = SIMHASH_N_BANDS - 1
 
 
-def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
-                           max_bucket: int = MAX_BUCKET,
-                           sh: DataFrame | None = None,
+def simhash_near_dup_pairs(docs: DataFrame,
                            cache: list | None = None) -> DataFrame:
     """SimHash Hamming-ball candidate pairs: band the fingerprint into
     ``SIMHASH_N_BANDS`` equal bit slices and self-equi-join on
     (band, band_val) — by pigeonhole, any pair within Hamming distance
-    ``SIMHASH_N_BANDS - 1`` (= 3 here) shares at least one untouched
+    :data:`SIMHASH_MAX_HAMMING` (= 3) shares at least one untouched
     band, so recall at the threshold is EXACT, not probabilistic.
     Exact distance is then one codegen ``bit_count(xor)`` per candidate.
     Same shape and degenerate-bucket cap as the MinHash banding — one
     hash self-join, never all-pairs."""
-    if sh is None:
-        sh = simhash(docs)
+    sh = simhash(docs)
     mask = (1 << SIMHASH_BAND_BITS) - 1
     band = F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_N_BANDS - 1))) \
         .alias("band")
@@ -380,7 +366,7 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
              f"(simhash >> (band * {SIMHASH_BAND_BITS})) & {mask}")))
     wb = Window.partitionBy("band", "band_val")
     b = (b.withColumn("bsize", F.count("*").over(wb))
-         .filter(F.col("bsize") <= max_bucket).drop("bsize"))
+         .filter(F.col("bsize") <= MAX_BUCKET).drop("bsize"))
     # persist ONLY under the caller-owned cache contract (the self-join
     # reads the banded frame twice, so callers that can unpersist —
     # e.g. the __spark_entry__ memo — should pass a cache list); an
@@ -400,11 +386,10 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
                                 .bitwiseXOR(F.col("b.simhash")))
                     .cast("int").alias("hamming"))
             .distinct()
-            .filter(F.col("hamming") <= max_hamming))
+            .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING))
 
 
-def simhash_near_dup_pairs_sql(max_hamming: int = 3,
-                               max_bucket: int = MAX_BUCKET) -> str:
+def simhash_near_dup_pairs_sql() -> str:
     mask = (1 << SIMHASH_BAND_BITS) - 1
     return f"""
 WITH b AS (
@@ -416,12 +401,12 @@ bc AS (
   SELECT doc_id, simhash, band, band_val FROM (
     SELECT doc_id, simhash, band, band_val,
            count(*) OVER (PARTITION BY band, band_val) AS bsize FROM b) q
-  WHERE bsize <= {max_bucket})
+  WHERE bsize <= {MAX_BUCKET})
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        cast(bit_count(xor(a.simhash, b.simhash)) as int) AS hamming
 FROM bc a JOIN bc b
   ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
@@ -430,24 +415,26 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 # ---------------------------------------------------------------------------
 
 TOKS_EXPR = "filter(split(text, ' '), t -> t <> '')"
+GRAM_N = 3            # word n-gram length of the trigram operators
+NGRAM_ID_WINDOW = 25  # ngram_jaccard_pairs: partner doc_id distance bound
 
 
-def gram_window_expr(n: int, toks: str = "toks") -> str:
+def gram_window_expr(n: int) -> str:
     """The ONE sliding-window gram-builder expression (codegen, never
     leaves the row): positional word n-grams over the filtered token
-    array ``toks``.  Single source of truth for every gram consumer —
+    array column ``toks``.  Single source of truth for every gram consumer —
     _gram_arrays (distinct sets), repetition_ratio's kernel
     (multiset), and curation's positional span grams (r5 review:
     previously inlined three times; the next tokenization fix must
     land exactly once)."""
-    parts = ", ".join(f"element_at({toks}, i + {j + 1})" for j in range(n))
-    return (f"case when size({toks}) >= {n} then "
-            f"transform(sequence(0, size({toks}) - {n}), "
+    parts = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(n))
+    return (f"case when size(toks) >= {n} then "
+            f"transform(sequence(0, size(toks) - {n}), "
             f"i -> concat_ws(' ', {parts})) "
             f"else array() end")
 
 
-def _gram_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
+def _gram_arrays(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, grams array<string>) — distinct word n-grams built
     per row in ONE codegen pass (r4).  The r3 form materialized the
     exploded token stream and positional-self-joined it (n−1) times —
@@ -459,14 +446,13 @@ def _gram_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
             .select("doc_id", F.expr(grams).alias("grams")))
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
-                        id_window: int = 25) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Exact trigram-set Jaccard for doc pairs with nearby doc_ids
     (bounded candidate generation; LSH covers the unbounded case).
     Gram construction is map-only (:func:`_gram_arrays`); the only
     remaining shuffles are the gram equi-join that generates
     intersections and its count aggregation."""
-    ga = _gram_arrays(docs, n)
+    ga = _gram_arrays(docs, GRAM_N)
     # r6: explode_outer + IS NOT NULL instead of inner explode — the
     # inner Generate over the array_distinct'd gram array measured
     # 8.4 s vs 0.2 s at sf0.1 (same 250k output rows; the outer form
@@ -492,14 +478,14 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     # every build group to one id window; the window predicate stays as
     # the residual and the pair set is unchanged (a qualifying
     # partner's block is always the row's own block or the next one).
-    blk = F.floor(F.col("doc_id") / F.lit(id_window))
+    blk = F.floor(F.col("doc_id") / F.lit(NGRAM_ID_WINDOW))
     a = g.select(F.col("doc_id").alias("id_a"), F.col("gram").alias("gram"),
                  F.explode(F.array(blk, blk + 1)).alias("blk"))
     b = g.select(F.col("doc_id").alias("id_b"), F.col("gram").alias("gram"),
                  blk.alias("blk"))
     inter = (a.join(b, ["gram", "blk"])
              .filter((F.col("id_a") < F.col("id_b"))
-                     & (F.col("id_b") <= F.col("id_a") + id_window))
+                     & (F.col("id_b") <= F.col("id_a") + NGRAM_ID_WINDOW))
              .groupBy(F.col("id_a").alias("doc_a"),
                       F.col("id_b").alias("doc_b"))
              .agg(F.count("*").alias("n_inter")))
@@ -512,7 +498,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
                         - F.col("n_inter"))).alias("jaccard")))
 
 
-def ngram_jaccard_sql(id_window: int = 25) -> str:
+def ngram_jaccard_sql() -> str:
     grams = """
  (SELECT DISTINCT doc_id, gram FROM (
     SELECT w1.doc_id AS doc_id,
@@ -539,7 +525,7 @@ sizes AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
   FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-   AND b.doc_id <= a.doc_id + {id_window}
+   AND b.doc_id <= a.doc_id + {NGRAM_ID_WINDOW}
   GROUP BY a.doc_id, b.doc_id)
 SELECT doc_a, doc_b, n_inter,
        n_inter / (sa.n_grams + sb.n_grams - n_inter) AS jaccard
@@ -651,19 +637,22 @@ FROM (
 """
 
 
-def minhash_rerank_exact(docs: DataFrame, n: int = 3,
-                         est_threshold: float = 0.5) -> DataFrame:
+RERANK_THRESHOLD = 0.5  # minhash_rerank_exact: est_jaccard shortlist cut
+
+
+def minhash_rerank_exact(docs: DataFrame) -> DataFrame:
     """Dedup pipeline composition: MinHash-LSH candidates above an
     estimate threshold → EXACT word-trigram Jaccard rerank (the
     standard two-phase near-dup pipeline at corpus scale: cheap sketch
     recall, exact precision on the shortlist)."""
-    cand = minhash_pairs(docs).filter(F.col("est_jaccard") >= est_threshold)
+    cand = minhash_pairs(docs).filter(
+        F.col("est_jaccard") >= RERANK_THRESHOLD)
     # r4: gram sets ride as per-doc ARRAYS through two hash joins onto
     # the shortlist and intersect in codegen — no gram-level shuffle at
     # all (the r3 form exploded all grams and re-aggregated).  Pairs
     # with an empty intersection are dropped, exactly as the old inner
     # gram-join (and the oracle) did.
-    ga = _gram_arrays(docs, n)
+    ga = _gram_arrays(docs, GRAM_N)
     j = (cand
          .join(ga.select(F.col("doc_id").alias("doc_a"),
                          F.col("grams").alias("grams_a")), "doc_a")
@@ -679,11 +668,11 @@ def minhash_rerank_exact(docs: DataFrame, n: int = 3,
             - F.col("n_inter"))).alias("exact_jaccard"))
 
 
-def minhash_rerank_exact_sql(est_threshold: float = 0.5) -> str:
+def minhash_rerank_exact_sql() -> str:
     return f"""
 WITH cand AS (
   SELECT doc_a, doc_b, est_jaccard FROM {MINHASH_PAIRS_SQL} q
-  WHERE est_jaccard >= {est_threshold!r}e0
+  WHERE est_jaccard >= {RERANK_THRESHOLD!r}e0
 ),
 pos_words AS (
   -- positions are re-ranked AFTER dropping empty tokens so that
@@ -820,12 +809,14 @@ C4_MIN_TOKENS = 5
 C4_MIN_AVG_WLEN = 2.0
 C4_MAX_AVG_WLEN = 12.0
 
+HOST_CAP = 5  # host_cap_keep_first: docs kept per host
 
-def url_host_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
+
+def url_host_stats(pages: DataFrame) -> DataFrame:
     """Docs per host + mean text length — the host-grouping primitive
     under per-host caps/dedup in CC pipelines.  One hash shuffle on the
     extracted host."""
-    host = F.regexp_extract(F.col(url_col), RE_HOST, 1)
+    host = F.regexp_extract(F.col("url"), RE_HOST, 1)
     return (pages.withColumn("host", host)
             .groupBy("host")
             .agg(F.count("*").alias("n_docs"),
@@ -893,7 +884,7 @@ FROM (
 """
 
 
-def repetition_ratio(docs: DataFrame, n: int = 3) -> DataFrame:
+def repetition_ratio(docs: DataFrame) -> DataFrame:
     """Fraction of a doc's word-trigram occurrences taken by its single
     most frequent trigram — the standard boilerplate/spam repetition
     signal.
@@ -903,7 +894,7 @@ def repetition_ratio(docs: DataFrame, n: int = 3) -> DataFrame:
     SORTED gram array (``aggregate`` with a (prev, run, best) struct
     accumulator); zero Exchange.  The positional-self-join form is the
     DuckDB twin :func:`repetition_ratio_sql`, pytest-compared."""
-    grams = gram_window_expr(n)
+    grams = gram_window_expr(GRAM_N)
     best = (
         "aggregate(array_sort(grams), "
         "named_struct('prev', '', 'run', 0L, 'best', 0L), "
@@ -951,10 +942,16 @@ GROUP BY doc_id
 """
 
 
-def near_dup_drop_list(docs: DataFrame, est_threshold: float = 0.7,
+# est_jaccard cut of the near-dup graph: drop list, components and the
+# incremental dedup all treat a pair at or above it as duplicates
+NEAR_DUP_THRESHOLD = 0.7
+CC_MAX_ITER = 25  # large-star/small-star round cap (O(log n) needed)
+
+
+def near_dup_drop_list(docs: DataFrame,
                        pairs: DataFrame | None = None) -> DataFrame:
     """Curation composition: from the MinHash-LSH candidate pairs above
-    ``est_threshold``, mark the LOWER-QUALITY member of each pair for
+    :data:`NEAR_DUP_THRESHOLD`, mark the LOWER-QUALITY member of each pair for
     dropping (quality = token count, ties keep the lower doc_id — the
     standard 'dedup keeps the best member of each near-dup cluster'
     step).  Emits (drop_doc_id, n_better): how many better near-twins a
@@ -964,7 +961,7 @@ def near_dup_drop_list(docs: DataFrame, est_threshold: float = 0.7,
     of persisting a second band cache."""
     if pairs is None:
         pairs = minhash_pairs(docs)
-    pairs = pairs.filter(F.col("est_jaccard") >= est_threshold)
+    pairs = pairs.filter(F.col("est_jaccard") >= NEAR_DUP_THRESHOLD)
     m = docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != ""))
@@ -1050,7 +1047,8 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
         raise RuntimeError(
             f"connected components (large-star/small-star): not "
             f"converged after {max_iter} rounds — this should only be "
-            f"possible if max_iter < O(log n); raise max_iter")
+            f"possible if max_iter < O(log n); raise "
+            f"textdedup.CC_MAX_ITER")
     # fixpoint is a star forest: every edge is (root, member)
     members = edges.select(F.col("v").alias("doc_id"),
                            F.col("u").alias("label"))
@@ -1059,9 +1057,8 @@ def _cc_star(e: DataFrame, max_iter: int) -> DataFrame:
     return members.unionByName(roots)
 
 
-def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
-                        pairs: DataFrame | None = None,
-                        max_iter: int = 25) -> DataFrame:
+def near_dup_components(docs: DataFrame,
+                        pairs: DataFrame | None = None) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup graph —
     the clustering step real dedup pipelines run between candidate
     pairs and the keep-one-per-cluster decision (each component gets
@@ -1075,23 +1072,23 @@ def near_dup_components(docs: DataFrame, est_threshold: float = 0.7,
     size ≥ 2 — (doc_id, component, is_kept)."""
     if pairs is None:
         pairs = minhash_pairs(docs)
-    e = (pairs.filter(F.col("est_jaccard") >= est_threshold)
+    e = (pairs.filter(F.col("est_jaccard") >= NEAR_DUP_THRESHOLD)
          .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
-    labels = _cc_star(e, max_iter)
+    labels = _cc_star(e, CC_MAX_ITER)
     return labels.select(
         "doc_id", F.col("label").alias("component"),
         (F.col("doc_id") == F.col("label")).alias("is_kept"))
 
 
-def near_dup_components_sql(est_threshold: float = 0.7) -> str:
+def near_dup_components_sql() -> str:
     return f"""
 WITH RECURSIVE
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM {MINHASH_PAIRS_SQL} qp
-  WHERE est_jaccard >= {est_threshold!r}e0
+  WHERE est_jaccard >= {NEAR_DUP_THRESHOLD!r}e0
   UNION
   SELECT doc_b AS src, doc_a AS dst FROM {MINHASH_PAIRS_SQL} qp
-  WHERE est_jaccard >= {est_threshold!r}e0),
+  WHERE est_jaccard >= {NEAR_DUP_THRESHOLD!r}e0),
 reach(a, b) AS (
   SELECT src, src FROM edges
   UNION
@@ -1110,8 +1107,8 @@ RE_HOSTPORT = "^[A-Za-z]+://([^/]+)"
 RE_REST = "^[A-Za-z]+://[^/]+(.*)$"
 
 
-def _canon_url_expr(url_col: str) -> F.Column:
-    u = F.regexp_replace(F.col(url_col), "#.*$", "")          # fragment
+def _canon_url_expr() -> F.Column:
+    u = F.regexp_replace(F.col("url"), "#.*$", "")          # fragment
     u = F.regexp_replace(u, "utm_[a-z]+=[^&#]*&?", "")        # tracking
     u = F.regexp_replace(u, "[?&]$", "")                      # dangling sep
     scheme = F.lower(F.regexp_extract(u, RE_SCHEME, 1))
@@ -1121,12 +1118,12 @@ def _canon_url_expr(url_col: str) -> F.Column:
     return F.concat(scheme, F.lit("://"), host, rest)
 
 
-def url_normalize_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_normalize_dedup(pages: DataFrame) -> DataFrame:
     """Canonical-URL dedup (CC curation: the same page crawled under
     scheme/host case variants, default ports, fragments, and utm_*
     tracking params must collapse to ONE canonical key): normalize in
     pure codegen, then one hash-shuffle groupBy — keep = min doc_id."""
-    return (pages.withColumn("canon_url", _canon_url_expr(url_col))
+    return (pages.withColumn("canon_url", _canon_url_expr())
             .groupBy("canon_url")
             .agg(F.count("*").alias("n_dups"),
                  F.min("doc_id").alias("keep_doc")))
@@ -1153,13 +1150,12 @@ GROUP BY canon_url
 """
 
 
-def host_cap_keep_first(pages: DataFrame, cap: int = 5,
-                        url_col: str = "url") -> DataFrame:
+def host_cap_keep_first(pages: DataFrame, cap: int = HOST_CAP) -> DataFrame:
     """Per-host document cap (CC pipelines bound any single host's
     contribution): rank a host's docs by doc_id and keep the first
     ``cap``.  One window shuffle on the host key; emits the rank and
     keep flag for every doc (no silent drops)."""
-    host = F.regexp_extract(F.col(url_col), RE_HOST, 1)
+    host = F.regexp_extract(F.col("url"), RE_HOST, 1)
     w = Window.partitionBy("host").orderBy(F.col("doc_id").asc())
     return (pages.withColumn("host", host)
             .withColumn("host_rank",
@@ -1168,9 +1164,9 @@ def host_cap_keep_first(pages: DataFrame, cap: int = 5,
                     (F.col("host_rank") <= cap).alias("keep")))
 
 
-def host_cap_keep_first_sql(src: str, cap: int = 5) -> str:
+def host_cap_keep_first_sql(src: str) -> str:
     return f"""
-SELECT doc_id, host, host_rank, host_rank <= {cap} AS keep FROM (
+SELECT doc_id, host, host_rank, host_rank <= {HOST_CAP} AS keep FROM (
   SELECT doc_id, host,
          cast(row_number() OVER (PARTITION BY host ORDER BY doc_id ASC)
               as int) AS host_rank
@@ -1179,13 +1175,13 @@ SELECT doc_id, host, host_rank, host_rank <= {cap} AS keep FROM (
 """
 
 
-def near_dup_drop_list_sql(est_threshold: float = 0.7) -> str:
+def near_dup_drop_list_sql() -> str:
     return f"""
 SELECT drop_doc_id, count(*) AS n_better FROM (
   SELECT case when (na < nb) or (na = nb and doc_a > doc_b)
               then doc_a else doc_b end AS drop_doc_id
   FROM (SELECT doc_a, doc_b FROM {MINHASH_PAIRS_SQL} qp
-        WHERE est_jaccard >= {est_threshold!r}e0) p
+        WHERE est_jaccard >= {NEAR_DUP_THRESHOLD!r}e0) p
   JOIN (SELECT doc_id, len(list_filter(string_split(text, ' '),
                              t -> t <> '')) AS na FROM documents) ma
     ON p.doc_a = ma.doc_id
@@ -1216,11 +1212,10 @@ GROUP BY drop_doc_id
 # caps are per side: the index's caps are a stored property of the
 # index, the batch caps itself.
 
-def _banded_sig_frame(docs: DataFrame,
-                      max_bucket: int = MAX_BUCKET) -> DataFrame:
+def _banded_sig_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, sigs, band, band_key) with degenerate buckets dropped —
     the band table of minhash_pairs and of each incremental-dedup side.
-    band_key formatting is EXACTLY minhash_bands' ("%02d:%d" join ","),
+    band_key formatting is EXACTLY MINHASH_BANDS_SQL's ("%02d:%d" join ","),
     so the band tables and the SQL oracle stay hash-comparable (perm is
     the static array position here)."""
     sig_arr = minhash_sig_array(docs)
@@ -1239,24 +1234,16 @@ def _banded_sig_frame(docs: DataFrame,
              .withColumn("band_key", band_key))
     wb = Window.partitionBy("band", "band_key")
     return (bands.withColumn("bsize", F.count("*").over(wb))
-            .filter(F.col("bsize") <= max_bucket).drop("bsize"))
+            .filter(F.col("bsize") <= MAX_BUCKET).drop("bsize"))
 
 
-def minhash_incremental_dedup(docs: DataFrame,
-                              est_threshold: float = 0.7,
-                              cache: list | None = None) -> DataFrame:
+def minhash_incremental_dedup(docs: DataFrame) -> DataFrame:
     """(doc_id, n_old_dups, n_prior_new_dups, keep) for every NEW doc
     (doc_id odd): how many indexed (old/even) near-twins and how many
     earlier-arrival (smaller-id new) near-twins it has at
-    ``est_jaccard >= est_threshold``; keep = 1 iff both are zero.
-
-    ``cache``: caller-owned persist contract (see minhash_pairs) — the
-    new-batch band table feeds both candidate joins."""
+    ``est_jaccard >= NEAR_DUP_THRESHOLD``; keep = 1 iff both are zero."""
     old_b = _banded_sig_frame(docs.filter(F.col("doc_id") % 2 == 0))
     new_b = _banded_sig_frame(docs.filter(F.col("doc_id") % 2 == 1))
-    if cache is not None:
-        new_b = new_b.persist()
-        cache.append(new_b)
     eq = F.size(F.filter(
         F.zip_with(F.col("a.sigs"), F.col("b.sigs"),
                    lambda x, y: x == y),
@@ -1269,7 +1256,7 @@ def minhash_incremental_dedup(docs: DataFrame,
                  .select(F.col("a.doc_id").alias("doc_id"),
                          F.col("b.doc_id").alias("partner"), est)
                  .distinct()
-                 .filter(F.col("est") >= est_threshold))
+                 .filter(F.col("est") >= NEAR_DUP_THRESHOLD))
     new_pairs = (new_b.alias("a")
                  .join(new_b.alias("b"),
                        (F.col("a.band") == F.col("b.band"))
@@ -1278,7 +1265,7 @@ def minhash_incremental_dedup(docs: DataFrame,
                  .select(F.col("a.doc_id").alias("doc_id"),
                          F.col("b.doc_id").alias("partner"), est)
                  .distinct()
-                 .filter(F.col("est") >= est_threshold))
+                 .filter(F.col("est") >= NEAR_DUP_THRESHOLD))
     o = old_pairs.groupBy("doc_id").agg(
         F.countDistinct("partner").alias("n_old_dups"))
     n = new_pairs.groupBy("doc_id").agg(
@@ -1305,7 +1292,7 @@ def _bands_capped_where_sql(pred: str) -> str:
 """
 
 
-def minhash_incremental_dedup_sql(est_threshold: float = 0.7) -> str:
+def minhash_incremental_dedup_sql() -> str:
     def scored(pairs: str) -> str:
         return f"""
 (SELECT p.doc_id, p.partner,
@@ -1327,10 +1314,10 @@ def minhash_incremental_dedup_sql(est_threshold: float = 0.7) -> str:
 WITH old_b AS (SELECT * FROM {_bands_capped_where_sql("doc_id % 2 = 0")} ob),
 new_b AS (SELECT * FROM {_bands_capped_where_sql("doc_id % 2 = 1")} nb),
 o_cnt AS (SELECT doc_id, count(*) AS n_old_dups
-          FROM {scored(op)} q WHERE est >= {est_threshold!r}e0
+          FROM {scored(op)} q WHERE est >= {NEAR_DUP_THRESHOLD!r}e0
           GROUP BY doc_id),
 n_cnt AS (SELECT doc_id, count(*) AS n_prior_new_dups
-          FROM {scored(np_)} q WHERE est >= {est_threshold!r}e0
+          FROM {scored(np_)} q WHERE est >= {NEAR_DUP_THRESHOLD!r}e0
           GROUP BY doc_id)
 SELECT d.doc_id,
        cast(coalesce(o.n_old_dups, 0) as bigint) AS n_old_dups,
@@ -1349,7 +1336,10 @@ LEFT JOIN n_cnt n ON d.doc_id = n.doc_id
 # TF-IDF top terms (corpus term weighting — the classic relevance signal)
 # ---------------------------------------------------------------------------
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
+TFIDF_K = 3  # tfidf_top_terms: terms kept per document
+
+
+def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_K) -> DataFrame:
     """Per-document top-``k`` terms by tf·idf, ties → term asc.
 
     idf = ln((N+1)/(df+1)) with N = corpus doc count (smoothed so
@@ -1382,7 +1372,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
             .select("doc_id", "term", "tf", "df_docs", "rk"))
 
 
-def tfidf_top_terms_sql(k: int = 3) -> str:
+def tfidf_top_terms_sql() -> str:
     return f"""
 WITH tf AS (
   SELECT doc_id, tok AS term, count(*) AS tf
@@ -1398,5 +1388,5 @@ SELECT doc_id, term, tf, df_docs, rk FROM (
                          / cast(dfreq.df_docs + 1 as double)) DESC,
                     tf.term ASC) as int) AS rk
   FROM tf JOIN dfreq USING (term) CROSS JOIN n) q
-WHERE rk <= {k}
+WHERE rk <= {TFIDF_K}
 """

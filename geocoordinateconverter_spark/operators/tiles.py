@@ -6,17 +6,15 @@ The corpus is Ljubljana-heavy by construction (60 % of coordinates in a
 ~12 km cluster — FIXTURES.md §1 skew rule), so a handful of cells carry
 most rows.  Spark's hash aggregation already does map-side partial
 aggregation, which absorbs *aggregation* skew for algebraic aggs; the
-operators here add the two patterns partial-agg cannot cover:
+operator here adds the pattern partial-agg cannot cover:
 
 * :func:`salted_tile_agg` — two-stage (cell, salt) → cell aggregation
   for high-cardinality per-cell state (e.g. ``collect_set``/distinct
   counts), where a single hot cell would otherwise pin one reducer.
-  Salt count is chosen FROM THE DATA by :func:`hot_cells` (top-k cell
-  histogram — SURVEY.md §5.2 "top-k cell histogram → salt factor").
-* :func:`salted_repartition` — writing output partitioned by cell
-  sends every hot-cell row to one task; salting the repartition key
-  spreads a hot cell over N file-writers while keeping cell-prefix
-  locality for readers.
+  The salt count is the fixed :data:`N_SALT`; :func:`salt_factor`
+  derives one from the data instead (:func:`hot_cells`' top-k cell
+  histogram — SURVEY.md §5.2 "top-k cell histogram → salt factor"),
+  but no operator uses it yet.
 
 AQE's skew-join splitting (enabled in plans/session.py) remains the
 runtime backstop; these operators are the explicit, plan-level
@@ -26,54 +24,55 @@ physical placement — pytest asserts salted ≡ unsalted results.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernels import cell_col
 
+TILE_RES = 7       # salted_tile_agg / hot_cells cell resolution
+N_SALT = 8         # salted_tile_agg: ways a hot cell is split
+TOPK_RES = 5       # tile_topk_points cell resolution
+TOPK_PER_TILE = 3  # tile_topk_points: points kept per tile
+KRING_RES = 5      # kring_smooth cell resolution
 
-def tile_agg(points: DataFrame, fi: str = "fi", la: str = "la",
-             res: int = 7, extra_aggs: list[Column] | None = None) -> DataFrame:
+
+def tile_agg(points: DataFrame, res: int) -> DataFrame:
     """Plain tile aggregation: codegen cell encode → hash agg (partial
     + final, one shuffle on cell)."""
-    aggs = [F.count("*").alias("n_pts")] + (extra_aggs or [])
     return (points
-            .withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-            .groupBy("cell").agg(*aggs))
+            .withColumn("cell", cell_col(F.col("fi"), F.col("la"), res))
+            .groupBy("cell").agg(F.count("*").alias("n_pts")))
 
 
-def hot_cells(points: DataFrame, fi: str = "fi", la: str = "la",
-              res: int = 7, top_k: int = 20) -> list[tuple[int, int]]:
+def hot_cells(points: DataFrame, top_k: int = 20) -> list[tuple[int, int]]:
     """Top-k (cell, count) histogram — the salt-factor input."""
-    rows = (points.withColumn("cell", cell_col(F.col(fi), F.col(la), res))
+    rows = (points.withColumn("cell", cell_col(F.col("fi"), F.col("la"),
+                                               TILE_RES))
             .groupBy("cell").count()
             .orderBy(F.col("count").desc(), F.col("cell").asc())
             .limit(top_k).collect())
     return [(r["cell"], r["count"]) for r in rows]
 
 
-def salt_factor(points: DataFrame, fi: str = "fi", la: str = "la",
-                res: int = 7, target_rows_per_task: int = 250_000) -> int:
+def salt_factor(points: DataFrame, target_rows_per_task: int = 250_000) -> int:
     """Salt count from the hottest cell's row count (≥1)."""
-    top = hot_cells(points, fi, la, res, top_k=1)
+    top = hot_cells(points, top_k=1)
     if not top:
         return 1
     return max(1, -(-top[0][1] // target_rows_per_task))
 
 
-def salted_tile_agg(points: DataFrame, key: str, fi: str = "fi",
-                    la: str = "la", res: int = 7,
-                    n_salt: int = 8) -> DataFrame:
+def salted_tile_agg(points: DataFrame, key: str) -> DataFrame:
     """Two-stage distinct-count per cell with explicit salting.
 
-    Stage 1 shuffles on (cell, salt) — hot cell split n_salt ways —
+    Stage 1 shuffles on (cell, salt) — hot cell split N_SALT ways —
     computing per-salt partial distinct sets; stage 2 merges the (small)
     partials on cell.  Equivalent to countDistinct(key) per cell, but no
     single reducer ever holds a hot cell's full key set.
     """
     salted = (points
-              .withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-              .withColumn("salt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_salt))))
+              .withColumn("cell", cell_col(F.col("fi"), F.col("la"), TILE_RES))
+              .withColumn("salt", F.pmod(F.xxhash64(F.col(key)), F.lit(N_SALT))))
     # exact distinct only: salt partitions a HASH of key, so per-salt
     # distinct sets are disjoint and their sum is the exact cell
     # distinct.  (An earlier draft also computed a per-salt HLL sketch
@@ -89,36 +88,22 @@ def salted_tile_agg(points: DataFrame, key: str, fi: str = "fi",
                  F.sum("ndx_part").alias("n_distinct")))
 
 
-def tile_topk_points(points: DataFrame, key: str, fi: str = "fi",
-                     la: str = "la", value: str = "h", res: int = 5,
-                     k: int = 3) -> DataFrame:
-    """Per-tile top-k points by ``value`` (ties by key asc, so the
-    SQL-window oracle matches exactly).
+def tile_topk_points(points: DataFrame, key: str) -> DataFrame:
+    """Per-tile top-:data:`TOPK_PER_TILE` points by height ``h`` (ties
+    by key asc, so the SQL-window oracle matches exactly).
 
     A codegen window top-k (r6) — ONE exchange on cell, no Python.  Not
     a grouped-map ``applyInPandas``: that calls Python once PER TILE,
     and ~3 ms of pandas overhead × |cells| dominated the query (measured
     30 s vs ~1 s at sf0.1 — the guide §2.3 warning that grouped-map
     ships and handles every row through Python)."""
-    from ..kernels import cell_col
-
-    pts = points.withColumn("cell", cell_col(F.col(fi), F.col(la), res))
-    w = Window.partitionBy("cell").orderBy(F.col(value).desc(),
+    pts = points.withColumn("cell", cell_col(F.col("fi"), F.col("la"),
+                                             TOPK_RES))
+    w = Window.partitionBy("cell").orderBy(F.col("h").desc(),
                                            F.col(key).asc())
     return (pts.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("cell", key, value, F.col("rk").cast("int").alias("rk")))
-
-
-def salted_repartition(points: DataFrame, fi: str = "fi", la: str = "la",
-                       res: int = 5, n_salt: int = 4) -> DataFrame:
-    """Repartition by (coarse cell, salt) for skew-proof partitioned
-    writes: hot cells fan out over n_salt writers."""
-    return (points
-            .withColumn("cell_p", cell_col(F.col(fi), F.col(la), res))
-            .withColumn("salt", F.pmod(F.monotonically_increasing_id(),
-                                       F.lit(n_salt)))
-            .repartition(F.col("cell_p"), F.col("salt")))
+            .filter(F.col("rk") <= TOPK_PER_TILE)
+            .select("cell", key, "h", F.col("rk").cast("int").alias("rk")))
 
 
 # ---------------------------------------------------------------------------
@@ -131,8 +116,7 @@ _CELL_AXIS = 1 << _cells.IX_SHIFT      # ix/iy field width in the cell id
 _CELL_RES = 1 << _cells.RES_SHIFT
 
 
-def kring_smooth(points: DataFrame, res: int = 5,
-                 fi: str = "fi", la: str = "la") -> DataFrame:
+def kring_smooth(points: DataFrame) -> DataFrame:
     """(cell, n_own, n_smooth, n_nbrs): each cell's own point count,
     the 3×3 k-ring(1) neighborhood sum, and how many populated
     neighbor cells contributed — the H3 ``kRing``-style smoothing /
@@ -148,8 +132,8 @@ def kring_smooth(points: DataFrame, res: int = 5,
     edge smooths over fewer neighbors, like any finite convolution).
     """
     from .. import cells as cellmod
-    n = cellmod.n_cells(res)
-    counts = tile_agg(points, fi, la, res)
+    n = cellmod.n_cells(KRING_RES)
+    counts = tile_agg(points, KRING_RES)
     d = counts.select(
         "n_pts",
         F.expr(f"(cell div {_CELL_AXIS}) % {_CELL_AXIS}").alias("ix"),
@@ -163,7 +147,7 @@ def kring_smooth(points: DataFrame, res: int = 5,
                  ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("own"))
          .filter(F.col("jx").between(0, n - 1)
                  & F.col("jy").between(0, n - 1)))
-    return (t.groupBy((F.lit(res).cast("long") * F.lit(_CELL_RES)
+    return (t.groupBy((F.lit(KRING_RES).cast("long") * F.lit(_CELL_RES)
                        + F.col("jx") * F.lit(_CELL_AXIS)
                        + F.col("jy")).alias("cell"))
             .agg(F.sum(F.when(F.col("own"), F.col("n_pts"))
@@ -172,15 +156,14 @@ def kring_smooth(points: DataFrame, res: int = 5,
                  F.count("*").alias("n_nbrs")))
 
 
-def kring_smooth_sql(points_src: str, res: int = 5,
-                     fi: str = "fi", la: str = "la") -> str:
+def kring_smooth_sql(points_src: str) -> str:
     from .. import cells as cellmod
-    n = cellmod.n_cells(res)
+    n = cellmod.n_cells(KRING_RES)
     offs = ", ".join(f"({dx}, {dy})"
                      for dx in (-1, 0, 1) for dy in (-1, 0, 1))
     return f"""
 WITH counts AS (
-  SELECT {cellmod.encode_sql(fi, la, res)} AS cell, count(*) AS n_pts
+  SELECT {cellmod.encode_sql("fi", "la", KRING_RES)} AS cell, count(*) AS n_pts
   FROM {points_src} p GROUP BY 1),
 d AS (
   SELECT n_pts, (cell // {_CELL_AXIS}) % {_CELL_AXIS} AS ix,
@@ -191,7 +174,7 @@ t AS (
          (dx = 0 AND dy = 0) AS own
   FROM d CROSS JOIN (VALUES {offs}) o(dx, dy)
   WHERE ix + dx BETWEEN 0 AND {n - 1} AND iy + dy BETWEEN 0 AND {n - 1})
-SELECT cast({res} as bigint) * {_CELL_RES}
+SELECT cast({KRING_RES} as bigint) * {_CELL_RES}
        + jx * {_CELL_AXIS} + jy AS cell,
        sum(CASE WHEN own THEN n_pts ELSE 0 END) AS n_own,
        sum(n_pts) AS n_smooth, count(*) AS n_nbrs

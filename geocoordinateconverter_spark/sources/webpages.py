@@ -203,8 +203,9 @@ def geoparse_gk_sql(src: str) -> str:
 """
 
 
-def classify_pair_sql(src: str, c1: str = "c1", c2: str = "c2") -> str:
-    """Free-format coordinate-pair classification — reimplementation of
+def classify_pair_sql(src: str) -> str:
+    """Free-format coordinate-pair classification of ``src``'s (c1, c2)
+    columns — reimplementation of
     the reference's magnitude dispatch + ``-r`` order reversal
     (gk-slo.c parse loop, SURVEY.md §3.1 S2): values < 90 are degrees
     (φ is the one in the latitude band, so a (λ, φ) pair is detected
@@ -218,6 +219,7 @@ def classify_pair_sql(src: str, c1: str = "c1", c2: str = "c2") -> str:
     is_east = lambda c: f"({c} >= 300000.0e0 and {c} <= 700000.0e0)"  # noqa: E731
     is_north = lambda c: (f"(({c} >= 0.0e0 and {c} < 300000.0e0) "
                           f"or {c} > 4000000.0e0)")  # noqa: E731
+    c1, c2 = "c1", "c2"
     return f"""
 (SELECT *,
    case
@@ -358,7 +360,7 @@ def geoparse_swapped_sql(src: str) -> str:
              f"WHERE regexp_extract(page_text, '{RE_POS_PAIR}', 1) <> '') q_p")
     return f"""
 (SELECT url, a1 AS fi, a2 AS la, kind
- FROM {classify_pair_sql(pairs, 'c1', 'c2')} q WHERE kind = 'geo')
+ FROM {classify_pair_sql(pairs)} q WHERE kind = 'geo')
 """
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 WINDOW_S = 300
+WATERMARK = "10 minutes"  # streaming twin's event-time lateness bound
 
 
 def windowed_event_agg(events: DataFrame) -> DataFrame:
@@ -39,8 +40,7 @@ FROM events GROUP BY 1, 2
 
 
 def windowed_event_agg_streaming(spark: SparkSession, parquet_path: str,
-                                 checkpoint_dir: str,
-                                 watermark: str = "10 minutes") -> DataFrame:
+                                 checkpoint_dir: str) -> DataFrame:
     """Streaming twin: file source → watermark → tumbling window.
     Returns the streaming DataFrame; callers attach writeStream with
     ``trigger(availableNow=True)`` for batch-equivalent runs."""
@@ -49,7 +49,7 @@ def windowed_event_agg_streaming(spark: SparkSession, parquet_path: str,
               # parquet NTZ → TIMESTAMP (session TZ is pinned UTC);
               # watermarks require the instant type
               .withColumn("ts", F.col("ts").cast("timestamp"))
-              .withWatermark("ts", watermark))
+              .withWatermark("ts", WATERMARK))
     win = F.window("ts", f"{WINDOW_S} seconds")
     return (stream
             .groupBy(win, "event_type")

@@ -106,7 +106,7 @@ def test_cells_roundtrip_and_parent():
 
 def test_cells_kring_cover():
     c = int(cells.encode(np.array([46.05]), np.array([14.5]), 7)[0])
-    ring = cells.k_ring(c, 1)
+    ring = cells.k_ring(c)
     assert len(ring) == 9 and c in ring
     cover = cells.cover_bbox(14.4, 46.0, 14.6, 46.1, 6)
     assert len(cover) > 0

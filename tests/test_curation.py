@@ -185,8 +185,7 @@ SPAN_TEXTS = [
 
 
 def test_dup_ngram_spans_matches_reference(spark):
-    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5, min_docs=2)
-           .toPandas())
+    got = cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS)).toPandas()
     got_t = sorted(map(tuple, got.to_numpy().tolist()))
     ref = _spans_reference(SPAN_TEXTS, 5, 2)
     assert got_t == ref
@@ -383,8 +382,7 @@ def test_line_dedup_matches_reference(spark):
 def test_dup_ngram_spans_merges_overlaps(spark):
     # doc1 repeats doc0's 8-token prefix twice, separated by filler —
     # expect TWO islands in doc1 covering [1,8]-ish and the tail
-    got = (cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS), n=5, min_docs=2)
-           .toPandas())
+    got = cu.dup_ngram_spans(_docs_df(spark, SPAN_TEXTS)).toPandas()
     d1 = got[got.doc_id == 1].sort_values("span_start")
     assert len(d1) == 2
     first, second = d1.iloc[0], d1.iloc[1]

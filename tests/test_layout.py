@@ -53,7 +53,7 @@ def test_zorder_write_files_have_tight_bboxes(spark):
     global_area = lo.FI_SPAN * lo.LA_SPAN
     with tempfile.TemporaryDirectory(prefix="zorder_") as base:
         zpath, rpath = f"{base}/z", f"{base}/r"
-        lo.zorder_write(pts, zpath, n_files=N_FILES)
+        lo.zorder_write(pts, zpath)
         # control: hash-scattered layout (what a plain shuffle write does)
         pts.repartition(N_FILES, "k").write.parquet(rpath)
         z_areas = _file_bbox_areas(zpath)
@@ -72,8 +72,7 @@ def test_zorder_write_files_have_tight_bboxes(spark):
 def test_zorder_key_locality(spark):
     # Morton property: points in the same small spatial cell share the
     # high key bits — nearby points land in the same file bucket
-    out = lo.zorder_keys(_points(spark, 1000), key="k",
-                         n_files=N_FILES).collect()
+    out = lo.zorder_keys(_points(spark, 1000)).collect()
     assert len({r.file_id for r in out}) == N_FILES
     zmax = (1 << (2 * lo.Z_BITS)) - 1
     assert all(0 <= r.zkey <= zmax for r in out)

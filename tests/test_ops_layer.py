@@ -142,7 +142,7 @@ def test_salted_agg_equals_unsalted(spark, skewed_pts):
              .agg(F.count("*").alias("n_pts"),
                   F.countDistinct("k").alias("n_distinct"))
              .toPandas().sort_values("cell").reset_index(drop=True))
-    salted = (tiles.salted_tile_agg(skewed_pts, key="k", n_salt=8)
+    salted = (tiles.salted_tile_agg(skewed_pts, key="k")
               .toPandas().sort_values("cell").reset_index(drop=True))
     pd.testing.assert_frame_equal(salted[plain.columns.tolist()], plain)
 
@@ -211,7 +211,7 @@ def test_rolling_fingerprint_uncapped(spark):
 
 
 def test_multimodal_stub_and_features(spark, docs):
-    feats = mm.extract_features(mm.html_binary(docs), "html", "raw").toPandas()
+    feats = mm.extract_features(mm.html_binary(docs)).toPandas()
     assert len(feats) == docs.count()
     assert (feats["n_bytes"] > 25).all()  # wrapper adds 27 bytes
     assert feats["magic"].iloc[0] == "3c68746d"  # '<htm'

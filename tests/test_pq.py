@@ -53,7 +53,7 @@ def test_pq_recall_story_on_clustered_fixture(spark):
     recovers to the nprobe cell bound — monotone by construction."""
     emb = sim.clustered_embeddings(_emb(spark))
     rep = {r.method: r.recall_at_k
-           for r in sim.pq_recall_report(emb, k=5).collect()}
+           for r in sim.pq_recall_report(emb).collect()}
     chance = 5.0 / 500.0
     assert rep["pq_adc"] > 5 * chance
     assert rep["ivfpq_rerank"] >= rep["ivfpq"]
@@ -68,7 +68,7 @@ def test_ivfpq_rerank_scores_are_exact(spark):
     emb = _emb(spark)
     exact = {(r.q_id, r.vec_id): r.cos_sim
              for r in sim.brute_force_topk(emb, k=50).collect()}
-    for r in sim.ivfpq_rerank_topk(emb, k=5).collect():
+    for r in sim.ivfpq_rerank_topk(emb).collect():
         if (r.q_id, r.vec_id) in exact:
             assert r.cos_sim == exact[(r.q_id, r.vec_id)]
 

@@ -124,7 +124,7 @@ def test_ivf_nprobe_recall_and_numpy_oracle(spark):
 
     from geocoordinateconverter_spark.operators import similarity as sim
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = sim.ivf_nprobe_topk(emb, k=3, nprobe=3).toPandas()
+    got = sim.ivf_nprobe_topk(emb, k=3).toPandas()
     pdf = emb.toPandas()
     X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     C = np.array([[sim.centroid_coef(c, d) for d in range(sim.DIM)]

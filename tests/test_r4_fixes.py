@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from tests.duckdb_twin import assert_matches_twin
+from tests.kmeans_replay import kmeans_replay_exact
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -19,10 +20,10 @@ def test_ivf_train_kmeans_exact_matches_numpy_bitwise(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pdf = emb.orderBy("vec_id").toPandas()
     V = np.stack(pdf["embedding"].to_numpy())
-    assign, Cq = sim.kmeans_replay_exact(V, n_iter=3)
+    assign, Cq = kmeans_replay_exact(V)
     sizes = {c: int((assign == c).sum()) for c in range(sim.N_CLUSTERS)
              if (assign == c).any()}
-    got = sim.ivf_train_kmeans_exact(emb, n_iter=3).collect()
+    got = sim.ivf_train_kmeans_exact(emb).collect()
     got_sizes = {}
     for r in got:
         got_sizes[r.cluster] = r.n_vecs
@@ -165,7 +166,7 @@ def test_knn_cellring_out_of_bbox_points(spark):
     pts = spark.createDataFrame(rows, "k long, fi double, la double")
     got = (knn_op.knn_join(pts, spark, key="k", k=3)
            .select("k", "station_id", "dist2", "rk"))
-    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k", 3),
+    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k"),
                         {"pts": pts}, min_rows=len(rows) * 3)
 
 
@@ -362,9 +363,8 @@ def test_ivf_train_kmeans_exact_partition_invariant(spark):
     from geocoordinateconverter_spark.operators import similarity as sim
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = {(r.cluster, r.d): (r.n_vecs, r.centroid)
-            for r in sim.ivf_train_kmeans_exact(emb, n_iter=3).collect()}
+            for r in sim.ivf_train_kmeans_exact(emb).collect()}
     scrambled = emb.repartition(13, "label")
     alt = {(r.cluster, r.d): (r.n_vecs, r.centroid)
-           for r in sim.ivf_train_kmeans_exact(scrambled,
-                                               n_iter=3).collect()}
+           for r in sim.ivf_train_kmeans_exact(scrambled).collect()}
     assert base == alt

@@ -292,7 +292,7 @@ def test_radius_join_random_points_match_numpy(spark):
         pd.DataFrame({"k": np.arange(n), "fi": fi, "la": la}))
     got = {(r.k, r.station_id): r.dist2 for r in
            knn_op.radius_join(df, spark).collect()}
-    pos = knn_op.station_positions(25)
+    pos = knn_op.station_positions()
     dfi = fi[:, None] - pos[None, :, 0]
     dla = knn_op.LA_FACTOR * (la[:, None] - pos[None, :, 1])
     d2 = dfi * dfi + dla * dla
@@ -320,7 +320,7 @@ def test_bbox_join_random_rects_match_numpy(spark):
     got = {(r.k, r.mun_id): (r.ox, r.oy) for r in
            bj.bbox_intersects_join(spark.createDataFrame(pdf),
                                    spark).collect()}
-    mun = np.array([r[1:] for r in bj.mun_bbox_rows(20)])
+    mun = np.array([r[1:] for r in bj.mun_bbox_rows()])
     ox = (np.minimum(pdf["pxmax"].to_numpy()[:, None], mun[None, :, 2])
           - np.maximum(pdf["pxmin"].to_numpy()[:, None], mun[None, :, 0]))
     oy = (np.minimum(pdf["pymax"].to_numpy()[:, None], mun[None, :, 3])

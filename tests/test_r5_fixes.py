@@ -11,6 +11,7 @@ from geocoordinateconverter_spark.operators import multimodal as mm
 from geocoordinateconverter_spark.operators import textdedup as td
 from geocoordinateconverter_spark.sources import shapefile as shp
 from tests.duckdb_twin import assert_matches_twin
+from tests.kmeans_replay import kmeans_replay_exact, pq_train_replay_exact
 
 
 # ---- cell-ring pruned join: gated cartesian fallback + NULL rule ---------
@@ -45,7 +46,7 @@ def test_cellring_out_of_bbox_rows_still_exact(spark):
     assert_matches_twin(
         knn_op.knn_join(pts, spark, key="k", k=3)
         .select("k", "station_id", "dist2", "rk"),
-        knn_op.knn_oracle_sql("pts", "k", 3), {"pts": pts}, min_rows=3 * 3)
+        knn_op.knn_oracle_sql("pts", "k"), {"pts": pts}, min_rows=3 * 3)
 
 
 def test_null_coords_excluded_by_every_method(spark):
@@ -158,8 +159,8 @@ def test_pq_train_codebooks_exact_matches_numpy_bitwise(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pdf = emb.orderBy("vec_id").toPandas()
     V = np.stack(pdf["embedding"].to_numpy())
-    codes, Cq = sim.pq_train_replay_exact(V, n_iter=3)
-    got = sim.pq_train_codebooks_exact(emb, n_iter=3).collect()
+    codes, Cq = pq_train_replay_exact(V)
+    got = sim.pq_train_codebooks_exact(emb).collect()
     sizes = {(m, j): int((codes[:, m] == j).sum())
              for m in range(sim.PQ_M) for j in range(sim.PQ_K)
              if (codes[:, m] == j).any()}
@@ -169,8 +170,7 @@ def test_pq_train_codebooks_exact_matches_numpy_bitwise(spark):
         assert r.centroid == Cq[r.m, r.cluster, r.d] / sim.KM_SCALE
     assert got_sizes == sizes
     # partition invariance (int sums are order-free)
-    got13 = sim.pq_train_codebooks_exact(emb.repartition(13),
-                                         n_iter=3).collect()
+    got13 = sim.pq_train_codebooks_exact(emb.repartition(13)).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, got13))
 
 
@@ -210,7 +210,7 @@ def test_pq_trained_beats_grid_adc_recall(spark):
         return hit / tot
 
     grid = sim.pq_codebook()
-    _, Cq = sim.pq_train_replay_exact(V, n_iter=3)
+    _, Cq = pq_train_replay_exact(V)
     trained = Cq.astype(np.float64) / sim.KM_SCALE
     r_grid, r_trained = adc_recall(grid), adc_recall(trained)
     assert r_trained > r_grid, (r_trained, r_grid)
@@ -246,7 +246,7 @@ def test_ivf_trained_beats_grid_cell_recall(spark):
 
     grid = np.array([[sim.centroid_coef(c, d) for d in range(sim.DIM)]
                      for c in range(sim.N_CLUSTERS)])
-    _, Cq = sim.kmeans_replay_exact(V, n_iter=3)
+    _, Cq = kmeans_replay_exact(V)
     r_grid = ivf_recall(grid)
     r_trained = ivf_recall(Cq.astype(np.float64) / sim.KM_SCALE)
     assert r_trained > r_grid, (r_trained, r_grid)

@@ -81,7 +81,7 @@ def test_ivfpq_kernel_equals_legacy(spark):
     # the r5 form (IVF cell equi-join over the nprobe probes, ADC fold
     # per pair, window rank) is the DuckDB twin ivfpq_topk_sql
     got = sim.ivfpq_topk(_emb(spark), k=5, nprobe=3)
-    assert_matches_twin(got, sim.ivfpq_topk_sql(k=5, nprobe=3), SF_SMOKE)
+    assert_matches_twin(got, sim.ivfpq_topk_sql(), SF_SMOKE)
 
 
 def test_token_budget_subbucket_decomposition(spark, monkeypatch):
@@ -119,7 +119,7 @@ def test_tile_topk_window_matches_oracle(spark):
     from geocoordinateconverter_spark.operators import tiles as tl
     em._register(spark, SF_SMOKE)
     pts = spark.sql(f"SELECT * FROM {em.SRC_WGS_ORDERS}")
-    got = tl.tile_topk_points(pts, key="k", res=5, k=3)
+    got = tl.tile_topk_points(pts, key="k")
     assert_matches_twin(got, em.oracle_sql()["tile_topk_window"], SF_SMOKE)
 
 
@@ -199,6 +199,6 @@ def test_kernel_invariant_to_partitioning(spark):
     # per-task preselection must not leak into the result: 1 partition
     # vs many partitions produce identical rows
     emb = _emb(spark)
-    one = _rows(sim.ivf_nprobe_topk(emb.coalesce(1), k=5, nprobe=3))
-    many = _rows(sim.ivf_nprobe_topk(emb.repartition(13), k=5, nprobe=3))
+    one = _rows(sim.ivf_nprobe_topk(emb.coalesce(1), k=5))
+    many = _rows(sim.ivf_nprobe_topk(emb.repartition(13), k=5))
     assert one == many and len(one) > 0

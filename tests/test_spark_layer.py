@@ -126,7 +126,7 @@ def test_knn_methods_agree(spark, pts_df):
     sequence)."""
     got = (knn_op.knn_join(pts_df, spark, key="k", k=3)
            .select("k", "station_id", "dist2", "rk"))
-    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k", 3),
+    assert_matches_twin(got, knn_op.knn_oracle_sql("pts", "k"),
                         {"pts": pts_df}, min_rows=N * 3)
 
 
@@ -144,7 +144,7 @@ def test_radius_join_methods_agree(spark, pts_df):
         knn_op.radius_oracle_sql("pts", "k"), {"pts": pts})
     assert 90002 not in set(a["k"])
     # every emitted pair satisfies the predicate; brute-force recount
-    pos = knn_op.station_positions(25)
+    pos = knn_op.station_positions()
     d2 = ((FI[:, None] - pos[None, :, 0]) ** 2
           + (knn_op.LA_FACTOR * (LA[:, None] - pos[None, :, 1])) ** 2)
     exp_in = int((d2 <= knn_op.RADIUS_DEFAULT ** 2).sum())
@@ -191,7 +191,7 @@ def test_height_mode_wrapper(spark, pts_df):
     bare = src.withColumn("o", k.transform_udf(2)(
         F.col("fi"), F.col("la"), F.col("h"))).select("k", "o.*").toPandas()
     for mode, expect in (("hc", "input"), ("ht", "chain")):
-        got = src.withColumn("o", k.transform_with_height_udf(2, mode)(
+        got = src.withColumn("o", k.transform_udf(2, mode)(
             F.col("fi"), F.col("la"), F.col("h"))) \
             .select("k", "o.*").toPandas()
         ref = (src.select("k", "h").toPandas() if expect == "input"
@@ -199,13 +199,13 @@ def test_height_mode_wrapper(spark, pts_df):
         a = got.sort_values("k")["h"].to_numpy()
         b = ref.sort_values("k")["h"].to_numpy()
         np.testing.assert_array_equal(a, b)
-    hg = src.withColumn("o", k.transform_with_height_udf(2, "hg")(
+    hg = src.withColumn("o", k.transform_udf(2, "hg")(
         F.col("fi"), F.col("la"), F.col("h"))).select("k", "o.*").toPandas()
     assert not np.array_equal(hg.sort_values("k")["h"].to_numpy(),
                               bare.sort_values("k")["h"].to_numpy())
     assert k.HEIGHT_MODE_DEFAULTS[3] == "ht"
     with _pytest.raises(ValueError, match="geographic endpoint"):
-        k.transform_with_height_udf(5, "hg")
+        k.transform_udf(5, "hg")
 
 
 def test_knn_kernel_plan_has_no_exchange(spark, pts_df):
@@ -220,7 +220,7 @@ def test_knn_vs_numpy_bruteforce(spark, pts_df):
     got = (knn_op.knn_join(pts_df, spark, key="k", k=3)
            .select("k", "station_id", "rk").toPandas()
            .sort_values(["k", "rk"]))
-    pos = knn_op.station_positions(25)
+    pos = knn_op.station_positions()
     d2 = (FI[:, None] - pos[None, :, 0]) ** 2 \
         + (knn_op.LA_FACTOR * (LA[:, None] - pos[None, :, 1])) ** 2
     order = np.lexsort((np.broadcast_to(np.arange(25), d2.shape), d2), axis=1)
@@ -261,7 +261,7 @@ def test_bbox_join_cover_equals_bruteforce(spark):
     got = (bj.bbox_intersects_join(pdf, spark).toPandas()
            .sort_values(["k", "mun_id"]).reset_index(drop=True))
     mun = spark.createDataFrame(
-        bj.mun_bbox_rows(20), "mun_id int, mxmin double, mymin double, "
+        bj.mun_bbox_rows(), "mun_id int, mxmin double, mymin double, "
                               "mxmax double, mymax double")
     ox = F.least("pxmax", "mxmax") - F.greatest("pxmin", "mxmin")
     oy = F.least("pymax", "mymax") - F.greatest("pymin", "mymin")

@@ -67,7 +67,7 @@ def main() -> None:
     plans["pip_join (WGS points, codegen refine)"] = formatted(pip_wgs_df)
     pip_wgs = physical(pip_wgs_df)
     plans["knn_join (kernel, zero-shuffle)"] = formatted(
-        knn_op.knn_join(pts, spark, key="k", k=3))
+        knn_op.knn_join(pts, spark, key="k"))
 
     pruned = (spark.table("lineitem")
               .filter(F.col("l_shipdate") <= F.lit("1995-01-01"))
